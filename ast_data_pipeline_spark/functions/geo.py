@@ -198,11 +198,14 @@ def utm_to_lonlat_cols(easting, northing, zone):
     the flagship when six lon/lat outputs each re-derived phi1/d) —
     DataFrame callers should use :func:`with_utm_lonlat`, which stages
     the shared subterms as named columns so each is computed once.
-    Double-precision math throughout; trig comes from the
-    deterministic :func:`psin_col`/:func:`pcos_col` polynomials (plus
-    the double-angle recurrences for sin 2mu..8mu), so the result is
-    BIT-identical to the DuckDB mirror on every input — no libm at
-    the boundary (r12; see the module-level trig note).
+    Even alone the pair is one tree of ~3e6 nodes once Catalyst copies
+    each shared subterm at every use, so planning it takes minutes and
+    GBs of driver heap. Double-precision math throughout; trig comes
+    from the deterministic :func:`psin_col`/:func:`pcos_col`
+    polynomials (plus the double-angle recurrences for sin 2mu..8mu),
+    so the result is BIT-identical to the DuckDB mirror on every
+    input — no libm at the boundary (r12; see the module-level trig
+    note).
     """
     sqrt1e2 = math.sqrt(1 - _E2)
     e1 = (1 - sqrt1e2) / (1 + sqrt1e2)

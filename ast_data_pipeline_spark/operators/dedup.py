@@ -240,7 +240,7 @@ def minhash_neardup_compact(
     """MinHash+LSH near-dup pairs: signatures -> band candidates ->
     rejoin-verify. ``max_bucket_occupancy`` (optional) arms the
     quadratic-blowup guard on the band buckets — see
-    guard_bucket_occupancy.
+    occupancy_poison.
 
     The verify stage re-joins the candidate pairs against the compact
     (doc, shingle-set) table on the doc ids, instead of carrying the

@@ -13,17 +13,17 @@ reference *intends* this (src/form_calcs.py:782-783) but immediately
 overwrites it with the first box's class (latent bug, :784); we
 implement the intended rule.
 
-Execution shape: ``groupBy(tile_name).applyInPandas`` — one shuffle on
-tile_name; components are tiny (objects per tile), so the O(n^2)
-adjacency test is per-group local work. At 100 TB this scales linearly
-with tiles across executors. A mega-tile (one tile with far more
-candidates than its peers) gets no automatic AQE skew split inside a
-grouped map, so past SPLIT_THRESHOLD the operator switches to
-``_components_gridded``: PBSM grid cells bound the per-chunk adjacency
-matrix and one union-find stitches components across cell borders —
-same fixpoint, memory linear in cell occupancy instead of quadratic in
-tile size. Only a genuinely dense single-cell clique still errors
-(MAX_GROUP).
+Execution shape: ``repartition(tile_key).mapInPandas`` over the merge
+candidates only — one shuffle on tile_key; components are tiny
+(objects per tile), so the O(n^2) adjacency test is per-tile local
+work. At 100 TB this scales linearly with tiles across executors. A
+mega-tile (one tile with far more candidates than its peers) gets no
+automatic AQE skew split inside a hash repartition, so past
+SPLIT_THRESHOLD the operator switches to ``_components_gridded``: PBSM
+grid cells bound the per-chunk adjacency matrix and one union-find
+stitches components across cell borders — same fixpoint, memory
+linear in cell occupancy instead of quadratic in tile size. Only a
+genuinely dense single-cell clique still errors (MAX_GROUP).
 """
 
 from __future__ import annotations

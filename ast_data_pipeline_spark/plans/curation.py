@@ -55,10 +55,10 @@ JACCARD_T = 0.5
 # candidate self-join pays s^2 for it (the r13 profile's 571-doc
 # buckets produced 3.1M junk pairs; 10k docs in one bucket would be
 # ~50M pairs — clearly a banding config failure, not data). The guard
-# shares the self-join's exchange, so healthy corpora pay one window
-# count per band row and no extra shuffle (operators/dedup.
-# guard_bucket_occupancy; synthetic hot-bucket pytest in
-# tests/test_curation_guard.py).
+# is a groupBy count over the band rows, unioned into the candidate
+# pairs: two small exchanges off the join path that contribute no rows
+# on healthy corpora (operators/dedup.occupancy_poison; synthetic
+# hot-bucket pytest in tests/test_curation_guard.py).
 MAX_BUCKET_OCCUPANCY = 10_000
 
 

@@ -8,7 +8,8 @@ Stages (each a pure DataFrame transform; one job, ~4 shuffles):
  3. per-tile bbox merge (A1, mapInPandas connected components)
  4. merged-bbox UTM coords + centroid + diameter (P8/P10/P12 on the
     merged extents)
- 5. WGS84 reprojection of bbox + centroid (P9 pandas UDF)
+ 5. WGS84 reprojection of bbox + centroid (P9, native-column Snyder
+    series inside whole-stage codegen; no Python UDF)
  6. county assignment via argmax-overlap spatial join (J8, broadcast)
  7. quad_id / capture_date derivations (P19) + WKT geometry (P11)
 

@@ -33,6 +33,39 @@ def _export_package_path() -> str:
     return os.environ["PYTHONPATH"]
 
 
+# Default driver heap: a share of physical RAM. In local mode the
+# driver JVM is the whole engine, and a test run can hold three JVMs at
+# once (the shared session plus the subprocess sessions of
+# test_contract, test_worker_env and test_geo, started one at a time),
+# so the share keeps 3 x heap inside MemTotal with room left for
+# off-heap memory and Python workers. A heap larger than RAM lets the
+# JVM grow until the kernel OOM-kills it, and every later test on the
+# shared session fails. The floor is Spark's own default heap.
+HEAP_SHARE = 0.25
+HEAP_MIN_MB = 1024
+
+
+def mem_total_mb() -> int:
+    """Physical RAM (``MemTotal`` in /proc/meminfo), MiB."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                return int(line.split()[1]) // 1024
+    raise RuntimeError("MemTotal missing from /proc/meminfo")
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for this machine: ``SPARK_GRAFT_DRIVER_MEM``
+    when set, else ``HEAP_SHARE`` of MemTotal, at least ``HEAP_MIN_MB``.
+    The one place the heap is decided; tools that build their own
+    session call it too."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    heap = max(int(mem_total_mb() * HEAP_SHARE), HEAP_MIN_MB)
+    return f"{heap}m"
+
+
 def get_spark(
     app_name: str = "ast-data-pipeline-spark",
     shuffle_partitions: int | None = None,
@@ -52,7 +85,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
         # Collected-result cap: Spark's 1g default is right for the
         # engine (queries should never collect big frames — the 14
         # engine collect() sites are all scalar/k-row), but the GRADING

@@ -98,65 +98,58 @@ def _fmt_numeric(v, dec: int) -> str:
     return f"{v:.{dec}f}" if dec else str(int(v))
 
 
-def _dbf_field_spec(pdf) -> list[tuple[str, str, int, int]]:
-    """(name, type, length, decimals) per column, dBase III flavors.
+def _dbf_fields(pdf) -> list[tuple[str, str, int, int, list[bytes]]]:
+    """(name, type, length, decimals, cells) per column, dBase III
+    flavors; ``cells`` are the column's values already formatted and
+    padded to the field length, one per row.
 
     Numeric widths are sized to the DATA (>= the 18/19 defaults): a
     formatted value wider than its declared field used to be silently
     left-truncated, corrupting the magnitude (r3 ADVICE). Values too
     wide even for the 254-char dBase cap raise instead.
     """
-    spec = []
+    fields = []
     for col in pdf.columns:
         s = pdf[col]
         kind = s.dtype.kind
         if kind in "iuf":
             dec = 8 if kind == "f" else 0
-            base = 19 if kind == "f" else 18
-            width = max([base] + [len(_fmt_numeric(v, dec)) for v in s])
+            txts = [_fmt_numeric(v, dec) for v in s]
+            width = max([19 if kind == "f" else 18] + [len(t) for t in txts])
             if width > 254:
                 raise ValueError(
                     f"write_shapefile: numeric column {col!r} needs a "
                     f"{width}-char DBF field (> 254 max); rescale or drop it"
                 )
-            spec.append((col, "N", width, dec))
+            cells = [t.rjust(width).encode("ascii") for t in txts]
+            fields.append((col, "N", width, dec, cells))
         elif kind == "b":
-            spec.append((col, "L", 1, 0))
+            fields.append((col, "L", 1, 0, [b"T" if v else b"F" for v in s]))
         else:
-            width = int(max([1] + [len(str(v)) for v in s])) if len(s) else 1
-            spec.append((col, "C", min(width, 254), 0))
-    return spec
+            txts = [str(v) for v in s]
+            width = min(max([1] + [len(t) for t in txts]), 254)
+            cells = [t.encode("utf-8", "replace")[:width].ljust(width) for t in txts]
+            fields.append((col, "C", width, 0, cells))
+    return fields
 
 
 def _dbf_bytes(pdf) -> bytes:
-    spec = _dbf_field_spec(pdf)
-    record_len = 1 + sum(w for _, _, w, _ in spec)
-    header_len = 32 + 32 * len(spec) + 1
+    fields = _dbf_fields(pdf)
+    record_len = 1 + sum(w for _, _, w, _, _ in fields)
+    header_len = 32 + 32 * len(fields) + 1
     out = bytearray()
     out += struct.pack(
         "<BBBBIHH20x", 0x03, 99, 1, 1, len(pdf), header_len, record_len
     )
-    for name, ftype, width, dec in spec:
+    for name, ftype, width, dec, _ in fields:
         out += struct.pack(
             "<11sc4xBB14x", name.encode("ascii")[:10], ftype.encode(), width, dec
         )
     out += b"\x0d"
-    for _, row in pdf.iterrows():
-        out += b" "  # not-deleted flag
-        for name, ftype, width, dec in spec:
-            v = row[name]
-            if ftype == "N":
-                txt = _fmt_numeric(v, dec)
-                if len(txt) > width:  # fields are data-sized; never slice
-                    raise ValueError(
-                        f"write_shapefile: value {txt!r} exceeds the "
-                        f"{width}-char DBF field {name!r}"
-                    )
-                out += txt.rjust(width).encode("ascii")
-            elif ftype == "L":
-                out += (b"T" if v else b"F")
-            else:
-                out += str(v).encode("utf-8", "replace")[:width].ljust(width)
+    # each record is b" " (not deleted) + its cells; an attribute-less
+    # frame still writes one flag-only record per row
+    columns = [cells for *_, cells in fields] or [[b""] * len(pdf)]
+    out += b"".join(b" " + b"".join(row) for row in zip(*columns))
     out += b"\x1a"
     return bytes(out)
 
@@ -165,25 +158,15 @@ def write_shapefile(df: DataFrame, path_base: str, geometry: str = "geometry_wkt
     """Write ``{path_base}.shp/.shx/.dbf/.prj`` from a DataFrame with a
     single-ring POLYGON WKT column. Attribute columns follow the
     reference's shapefile constraints: list columns dropped, names
-    truncated to 10 chars (``shapefile_compat_columns``). Returns the
-    record count. Bounded by ``MAX_REPORT_ROWS`` (format caps at 2 GB)."""
-    from .sinks import MAX_REPORT_ROWS, shapefile_compat_columns
+    truncated to 10 chars (``sinks.shapefile_compat_frame``). Returns
+    the record count. Bounded by ``MAX_REPORT_ROWS`` (format caps at
+    2 GB). Same collect and writers as ``sinks.export_inventory``; the
+    list columns are dropped before the collect, since only the export
+    needs them driver-side (for its GeoJSON)."""
+    from .sinks import collect_report, list_columns, shapefile_compat_frame
 
-    # Geometry goes FIRST through the rename pass: the 10-char dedup
-    # keeps the first occurrence's name and suffixes later collisions,
-    # so an attribute sharing geometry's truncated prefix can no longer
-    # steal the geometry column (r3 ADVICE).
-    compat = shapefile_compat_columns(
-        df.select(geometry, *[c for c in df.columns if c != geometry])
-    )
-    geom10 = compat.columns[0]
-    pdf = compat.limit(MAX_REPORT_ROWS + 1).toPandas()
-    if len(pdf) > MAX_REPORT_ROWS:
-        raise ValueError(
-            f"write_shapefile: >{MAX_REPORT_ROWS} rows; shapefiles are a "
-            "report-scale GIS hand-off, keep fact-scale data in parquet"
-        )
-    return _write_shapefile_pdf(pdf, path_base)
+    pdf = collect_report(df.drop(*list_columns(df)), "write_shapefile")
+    return _write_shapefile_pdf(shapefile_compat_frame(pdf, geometry, []), path_base)
 
 
 def _write_shapefile_pdf(pdf, path_base: str) -> int:
@@ -222,7 +205,7 @@ def write_shapefile_rows(
     VERDICT r8 #2). Commit is pure I/O now."""
     import pandas as pd
 
-    from .sinks import MAX_REPORT_ROWS, shapefile_compat_names
+    from .sinks import MAX_REPORT_ROWS, shapefile_compat_frame
 
     if geometry not in field_names:
         raise ValueError(f"write_shapefile_rows: no {geometry!r} column")
@@ -232,19 +215,13 @@ def write_shapefile_rows(
             "are a report-scale GIS hand-off, keep fact-scale data in parquet"
         )
     pdf = pd.DataFrame(list(rows), columns=field_names)
-    # geometry FIRST through the rename pass (same rationale as
-    # write_shapefile), list-typed columns dropped as in
-    # shapefile_compat_columns
-    ordered = [geometry] + [c for c in field_names if c != geometry]
-    pdf = pdf[ordered]
+    # rows carry no schema: sniff the list-typed columns from the data
     listy = [
         c
         for c in pdf.columns
         if any(isinstance(v, (list, tuple)) for v in pdf[c].head(50))
     ]
-    pdf = pdf.drop(columns=listy)
-    pdf.columns = shapefile_compat_names(list(pdf.columns))
-    return _write_shapefile_pdf(pdf, path_base)
+    return _write_shapefile_pdf(shapefile_compat_frame(pdf, geometry, listy), path_base)
 
 
 # ---- read side (S4: zipped-shapefile scan, real binary parse) --------

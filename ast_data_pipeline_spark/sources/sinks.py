@@ -9,7 +9,12 @@
   shapefile-compatible variant with 10-char truncated column names —
   the reference's ESRI shapefile sink truncates ``object_class`` ->
   ``object_cla`` etc. (seen at distribution_by_county_state.py:29,32);
-  emitted as a documented legacy-compat artifact.
+  emitted as a documented legacy-compat artifact. The GIS hand-off
+  (``export_inventory``: .json, .geojson, .shp/.shx/.dbf/.prj) runs
+  the inventory plan ONCE: one bounded Arrow collect gives one pandas
+  snapshot, the FeatureCollection text is serialized once and written
+  under both names, and the shapefile is built from the same snapshot
+  — so the artifacts agree row for row.
 - K5 JSON list sink (ref: src/form_calcs.py:54-65).
 """
 
@@ -63,20 +68,35 @@ def shapefile_compat_names(names: list[str]) -> list[str]:
     return out
 
 
+def list_columns(df: DataFrame) -> list[str]:
+    """Names of the array-typed columns: GeoJSON carries them as JSON
+    lists, DBF cannot carry them at all."""
+    return [name for name, dtype in df.dtypes if dtype.startswith("array")]
+
+
 def shapefile_compat_columns(df: DataFrame) -> DataFrame:
     """Truncate column names to the DBF 10-char limit, deduplicating
     with numeric suffixes the way ESRI writers do; drops list-typed
     columns (shapefiles cannot carry them — the reference's shp sink
     drops ``image_name`` the same way)."""
-    out = df
-    for name, dtype in df.dtypes:
-        if dtype.startswith("array"):
-            out = out.drop(name)
+    out = df.drop(*list_columns(df))
     renames = list(zip(out.columns, shapefile_compat_names(out.columns)))
     # One select with aliases, NOT sequential withColumnRenamed: the
     # sequential form renames every column matching the name, so
     # truncating A -> B while an original B exists clobbered both.
     return out.select([F.col(f"`{old}`").alias(new) for old, new in renames])
+
+
+def shapefile_compat_frame(pdf, geometry: str, drop: list[str]):
+    """The pandas twin of ``shapefile_compat_columns`` for the
+    shapefile writers: ``drop`` (the list-typed columns) removed,
+    ``geometry`` moved FIRST, names through ``shapefile_compat_names``.
+    Geometry goes first through the rename pass because the 10-char
+    dedup keeps the first occurrence's name and suffixes later
+    collisions, so an attribute sharing geometry's truncated prefix
+    cannot steal the geometry column (r3 ADVICE)."""
+    ordered = [geometry] + [c for c in pdf.columns if c != geometry and c not in drop]
+    return pdf[ordered].set_axis(shapefile_compat_names(ordered), axis=1)
 
 
 def write_inventory_json(inv: DataFrame, path: str, shp_compat_path: str | None = None) -> None:
@@ -93,42 +113,59 @@ def write_json_list(values: list, path: str) -> None:
         json.dump(values, f)
 
 
-def write_geojson(df: DataFrame, path: str, geometry: str = "geometry_wkt") -> int:
-    """GeoJSON FeatureCollection from a DataFrame with a single-ring
-    POLYGON WKT column — the reference emits its inventory as
-    ``gdf.to_json()`` (a FeatureCollection) under BOTH the ``.json``
-    and ``.geojson`` names (ref: src/form_calcs.py:1040-1052). All
-    non-geometry columns become feature properties; list columns ride
-    along intact (GeoJSON, unlike DBF, can carry them). Driver-side
-    report sink, bounded by MAX_REPORT_ROWS. Returns feature count."""
-    from .shapefile import parse_polygon_wkt
-
+def collect_report(df: DataFrame, sink: str):
+    """One bounded Arrow collect for the driver-side K4 writers:
+    ``MAX_REPORT_ROWS + 1`` rows at most cross to the driver, and more
+    than ``MAX_REPORT_ROWS`` raise. One call is one execution of
+    ``df``'s plan."""
     pdf = df.limit(MAX_REPORT_ROWS + 1).toPandas()
     if len(pdf) > MAX_REPORT_ROWS:
         raise ValueError(
-            f"write_geojson: >{MAX_REPORT_ROWS} rows; GeoJSON is a "
-            "report-scale hand-off, keep fact-scale data in parquet"
+            f"{sink}: >{MAX_REPORT_ROWS} rows (MAX_REPORT_ROWS); GeoJSON "
+            "and shapefiles are a report-scale GIS hand-off, keep "
+            "fact-scale data in parquet"
         )
-    props = [c for c in pdf.columns if c != geometry]
+    return pdf
+
+
+def feature_collection_json(pdf, geometry: str, lists: list[str]) -> str:
+    """GeoJSON FeatureCollection text of a collected frame with a
+    single-ring POLYGON WKT column — the reference emits its inventory
+    as ``gdf.to_json()`` (ref: src/form_calcs.py:1040-1052). All
+    non-geometry columns become feature properties; the ``lists``
+    columns (numpy arrays after the Arrow collect) become JSON lists;
+    ``to_dict("records")`` boxes the numpy scalars, which ``json``
+    cannot encode, to Python values."""
+    from .shapefile import parse_polygon_wkt
+
+    props = pdf.drop(columns=[geometry])
+    records = props.to_dict("records")
+    for c in lists:
+        for rec, v in zip(records, props[c]):
+            rec[c] = v.tolist() if hasattr(v, "tolist") else v
     features = [
         {
             "type": "Feature",
             "geometry": {
                 "type": "Polygon",
-                "coordinates": [
-                    [[x, y] for x, y in parse_polygon_wkt(row[geometry])]
-                ],
+                "coordinates": [[[x, y] for x, y in parse_polygon_wkt(wkt)]],
             },
-            "properties": {
-                c: (row[c].tolist() if hasattr(row[c], "tolist") else row[c])
-                for c in props
-            },
+            "properties": rec,
         }
-        for _, row in pdf.iterrows()
+        for wkt, rec in zip(pdf[geometry], records)
     ]
+    return json.dumps({"type": "FeatureCollection", "features": features})
+
+
+def write_geojson(df: DataFrame, path: str, geometry: str = "geometry_wkt") -> int:
+    """GeoJSON FeatureCollection from a DataFrame with a single-ring
+    POLYGON WKT column (``feature_collection_json``); list columns ride
+    along intact (GeoJSON, unlike DBF, can carry them). Driver-side
+    report sink, bounded by MAX_REPORT_ROWS. Returns feature count."""
+    pdf = collect_report(df, "write_geojson")
     with open(path, "w") as f:
-        json.dump({"type": "FeatureCollection", "features": features}, f)
-    return len(features)
+        f.write(feature_collection_json(pdf, geometry, list_columns(df)))
+    return len(pdf)
 
 
 def export_inventory(
@@ -142,15 +179,25 @@ def export_inventory(
     ``{name}.geojson`` (both the GeoJSON FeatureCollection, as
     ``gdf.to_json()`` writes), and ``{name}.shp/.shx/.dbf/.prj`` (list
     columns dropped, 10-char DBF names — the constraints the
-    reference's geopandas ``to_file`` applies). Returns per-artifact
-    row counts."""
+    reference's geopandas ``to_file`` applies).
+
+    ``inv``'s plan executes exactly once: one bounded collect
+    (``collect_report``) gives the one pandas snapshot every artifact
+    is written from, and the FeatureCollection is serialized once, so
+    ``.json`` and ``.geojson`` are the same bytes and feature *i* is
+    shapefile record *i*. Raises the MAX_REPORT_ROWS ``ValueError``
+    before any file is written. Returns per-artifact row counts."""
     import os
 
-    from .shapefile import write_shapefile
+    from .shapefile import _write_shapefile_pdf
 
+    pdf = collect_report(inv, "export_inventory")
+    lists = list_columns(inv)
+    text = feature_collection_json(pdf, geometry, lists)
     os.makedirs(output_dir, exist_ok=True)
     base = os.path.join(output_dir, name)
-    n_json = write_geojson(inv, base + ".json", geometry)
-    n_geo = write_geojson(inv, base + ".geojson", geometry)
-    n_shp = write_shapefile(inv, base, geometry)
-    return {"json": n_json, "geojson": n_geo, "shp": n_shp}
+    for ext in (".json", ".geojson"):
+        with open(base + ext, "w") as f:
+            f.write(text)
+    n_shp = _write_shapefile_pdf(shapefile_compat_frame(pdf, geometry, lists), base)
+    return {"json": len(pdf), "geojson": len(pdf), "shp": n_shp}

@@ -20,3 +20,21 @@ def test_foreign_session_timezone(spark, sf_dir):
         assert not problems, f"{name}: {problems}"
     # the engine pinned the foreign session back to UTC via the catalog
     assert foreign.conf.get("spark.sql.session.timeZone") == "UTC"
+
+
+# JVMs one test run can hold at once: the shared ``spark`` fixture, the
+# bench.py subprocess (test_contract), the worker-env subprocess
+# (test_worker_env) and the unstaged-reprojection subprocess (test_geo),
+# the subprocesses one at a time — each sized by session.driver_memory().
+TEST_RUN_JVMS = 3
+
+
+def test_default_heap_fits_physical_ram(monkeypatch):
+    from ast_data_pipeline_spark.session import driver_memory, mem_total_mb
+
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    heap = driver_memory()
+    assert heap.endswith("m")
+    assert int(heap[:-1]) * TEST_RUN_JVMS <= mem_total_mb()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert driver_memory() == "3g"

@@ -189,3 +189,17 @@ def test_shapefile_zip_read_roundtrip(spark, sf_dir, tmp_path):
     raw[hlen] = ord("*")
     pdf = read_dbf(bytes(raw))
     assert len(pdf) == 1
+
+
+def test_dbf_int_exact_beside_float(tmp_path):
+    """An int64 attribute next to only float attributes is written
+    exactly: a row-wise walk upcast the row to float64 and rounded
+    ints past 2**53."""
+    from ast_data_pipeline_spark.sources.shapefile import read_dbf, write_shapefile_rows
+
+    base = str(tmp_path / "ints")
+    square = "POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))"
+    write_shapefile_rows([(square, 2**60 + 1, 2.5)], ["geometry_wkt", "n", "v"], base)
+    with open(base + ".dbf", "rb") as f:
+        back = read_dbf(f.read())
+    assert back.to_dict("records") == [{"n": 2**60 + 1, "v": 2.5}]

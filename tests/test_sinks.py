@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import json
+import os
+import struct
 
 import pytest
+from pyspark.sql import functions as F
 
 from ast_data_pipeline_spark.plans.tank_inventory import tank_inventory
 from ast_data_pipeline_spark.sources.sinks import (
@@ -81,21 +84,48 @@ def test_k1_csv_report_row_bound(spark, tmp_path, monkeypatch):
         sinks.write_csv_report(big, str(tmp_path / "big_report"))
 
 
-def test_k4_export_inventory_trio(spark, sf_dir, tmp_path):
-    import os
+def _last_sql_execution(spark) -> int:
+    """Id of the newest SQL execution in the session's status store,
+    after the listener bus has delivered every finished event."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = int(store.executionsCount())
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
 
-    from ast_data_pipeline_spark.sources.sinks import export_inventory
+
+def _shp_record_bboxes(path):
+    with open(path, "rb") as f:
+        raw = f.read()
+    out, off = [], 100
+    while off < len(raw):
+        _, words = struct.unpack_from(">ii", raw, off)
+        out.append(struct.unpack_from("<4d", raw, off + 12))
+        off += 8 + words * 2
+    return out
+
+
+def _read(path) -> bytes:
+    with open(path, "rb") as f:
+        return f.read()
+
+
+def test_k4_export_inventory_trio(spark, sf_dir, tmp_path):
+    from ast_data_pipeline_spark.sources.shapefile import read_dbf, write_shapefile
+    from ast_data_pipeline_spark.sources.sinks import export_inventory, write_geojson
 
     inv = tank_inventory(spark, sf_dir).select(
         "tank_id", "object_class", "image_names", "geometry_wkt",
         "diameter", "county",
-    )
+    ).orderBy("tank_id")
+    before = _last_sql_execution(spark)
     counts = export_inventory(inv, str(tmp_path), name="tla")
+    # one plan execution feeds all six files
+    assert _last_sql_execution(spark) - before == 1
     n = inv.count()
     assert counts == {"json": n, "geojson": n, "shp": n}
     # the reference writes the FeatureCollection under BOTH names
+    assert _read(tmp_path / "tla.json") == _read(tmp_path / "tla.geojson")
     fc = json.load(open(tmp_path / "tla.json"))
-    assert fc == json.load(open(tmp_path / "tla.geojson"))
     assert fc["type"] == "FeatureCollection" and len(fc["features"]) == n
     f0 = fc["features"][0]
     assert f0["geometry"]["type"] == "Polygon"
@@ -106,3 +136,74 @@ def test_k4_export_inventory_trio(spark, sf_dir, tmp_path):
     assert "geometry_wkt" not in f0["properties"]
     for ext in (".shp", ".shx", ".dbf", ".prj"):
         assert os.path.exists(tmp_path / ("tla" + ext))
+
+    # feature i, .shp record i and .dbf row i describe the same tank
+    dbf = read_dbf(_read(tmp_path / "tla.dbf"))
+    bboxes = _shp_record_bboxes(tmp_path / "tla.shp")
+    assert len(dbf) == len(bboxes) == n
+    for feat, tank_id, bbox in zip(fc["features"], dbf["tank_id"], bboxes):
+        assert feat["properties"]["tank_id"] == tank_id
+        xs, ys = zip(*feat["geometry"]["coordinates"][0])
+        assert (min(xs), min(ys), max(xs), max(ys)) == bbox
+
+    # the per-artifact writers produce the export's bytes
+    write_geojson(inv, str(tmp_path / "solo.geojson"))
+    write_shapefile(inv, str(tmp_path / "solo"))
+    for ext in (".geojson", ".shp", ".shx", ".dbf", ".prj"):
+        assert _read(tmp_path / ("solo" + ext)) == _read(tmp_path / ("tla" + ext)), ext
+
+
+def test_k4_export_empty_inventory(spark, sf_dir, tmp_path):
+    from ast_data_pipeline_spark.sources.sinks import export_inventory
+
+    inv = tank_inventory(spark, sf_dir).limit(0)
+    counts = export_inventory(inv, str(tmp_path), name="tla")
+    assert counts == {"json": 0, "geojson": 0, "shp": 0}
+    for ext in (".json", ".geojson"):
+        fc = json.load(open(tmp_path / ("tla" + ext)))
+        assert fc == {"type": "FeatureCollection", "features": []}
+    for ext in (".shp", ".shx"):
+        raw = _read(tmp_path / ("tla" + ext))
+        assert len(raw) == 100  # header only
+        assert struct.unpack_from(">i", raw, 24)[0] == 50  # file length, words
+        assert struct.unpack_from("<4d", raw, 36) == (0.0, 0.0, 0.0, 0.0)
+    raw = _read(tmp_path / "tla.dbf")
+    nrec, hlen, rlen = struct.unpack_from("<IHH", raw, 4)
+    assert nrec == 0
+    assert hlen == 32 + 32 * (len(inv.columns) - 2) + 1  # geometry + list dropped
+    assert len(raw) == hlen + 1 and raw[-2:] == b"\x0d\x1a"
+
+
+def test_k4_export_row_cap_writes_nothing(spark, tmp_path, monkeypatch):
+    import ast_data_pipeline_spark.sources.sinks as sinks
+
+    monkeypatch.setattr(sinks, "MAX_REPORT_ROWS", 5)
+    df = spark.range(10).select(
+        F.col("id").alias("tank_id"),
+        F.lit("POLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))").alias("geometry_wkt"),
+    )
+    out = tmp_path / "export"
+    with pytest.raises(ValueError, match="export_inventory: >5 rows"):
+        sinks.export_inventory(df, str(out))
+    assert not out.exists()
+
+
+def test_k4_export_null_string_and_nan_double(spark, tmp_path):
+    from ast_data_pipeline_spark.sources.shapefile import read_dbf
+    from ast_data_pipeline_spark.sources.sinks import export_inventory
+
+    square = "POLYGON ((0 0, 0 1, 1 1, 1 0, 0 0))"
+    df = spark.createDataFrame(
+        [(1, None, float("nan"), square), (2, "tank", 2.5, square)],
+        "tank_id long, county string, diameter double, geometry_wkt string",
+    )
+    export_inventory(df, str(tmp_path), name="tla")
+    back = read_dbf(_read(tmp_path / "tla.dbf"))
+    # DBF has no null: a null string is written as its str() and a NaN
+    # numeric as a blank field, which reads back as None
+    assert back["county"].tolist() == ["None", "tank"]
+    assert back["diameter"].tolist()[1] == 2.5
+    assert back["diameter"].isna().tolist() == [True, False]
+    props = [f["properties"] for f in json.load(open(tmp_path / "tla.geojson"))["features"]]
+    assert props[0]["county"] is None and props[0]["diameter"] != props[0]["diameter"]
+    assert props[1] == {"tank_id": 2, "county": "tank", "diameter": 2.5}

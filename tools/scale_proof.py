@@ -45,6 +45,8 @@ def _fresh_session(cpus: int):
     the blocks, not the plan)."""
     from pyspark.sql import SparkSession
 
+    from ast_data_pipeline_spark.session import driver_memory
+
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("scale-proof")
@@ -52,7 +54,7 @@ def _fresh_session(cpus: int):
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedStages", "200000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

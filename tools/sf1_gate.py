@@ -120,8 +120,12 @@ def main() -> None:
     # The gate hashes WHOLE results driver-side (the driver-gate
     # shape); at sf1 the flagship's 4.8M-row frame serializes past
     # Spark's 1g maxResultSize default, so raise it for this harness
-    # only — engine queries keep the loud 1g guard (session.py).
+    # only — engine queries keep the loud 1g guard (session.py). The
+    # heap must hold such a result too, so the harness keeps the 64g
+    # heap its recorded sf1 runs used instead of the session's
+    # RAM-share default (which can sit below the 16g result cap).
     os.environ.setdefault("SPARK_GRAFT_MAX_RESULT_SIZE", "16g")
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "64g")
 
     from ast_data_pipeline_spark.oracle import canonical_rows, run_oracle_sql
     from ast_data_pipeline_spark.registry import load_all

@@ -45,6 +45,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from ast_data_pipeline_spark.registry import load_all
+    from ast_data_pipeline_spark.session import driver_memory
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = (
@@ -54,7 +55,7 @@ def main() -> None:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "64g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # the full ledger accumulates thousands of stages; the default
