@@ -14,16 +14,19 @@ overwrites it with the first box's class (latent bug, :784); we
 implement the intended rule.
 
 Execution shape: ``repartition(tile_key).mapInPandas`` over the merge
-candidates only — one shuffle on tile_key; components are tiny
-(objects per tile), so the O(n^2) adjacency test is per-tile local
-work. At 100 TB this scales linearly with tiles across executors. A
-mega-tile (one tile with far more candidates than its peers) gets no
-automatic AQE skew split inside a hash repartition, so past
-SPLIT_THRESHOLD the operator switches to ``_components_gridded``: PBSM
-grid cells bound the per-chunk adjacency matrix and one union-find
-stitches components across cell borders — same fixpoint, memory
-linear in cell occupancy instead of quadratic in tile size. Only a
-genuinely dense single-cell clique still errors (MAX_GROUP).
+candidates only — one shuffle on tile_key, then one labelling pass per
+partition (``_component_labels``). Its unit of work is a *group* of
+row indices that get the all-pairs P14 test: a tile is one group, so
+the O(n^2) test is per-tile local work and at 100 TB scales linearly
+with tiles across executors. A mega-tile (one tile with far more
+candidates than its peers) gets no automatic AQE skew split inside a
+hash repartition, so past SPLIT_THRESHOLD it contributes one group per
+PBSM grid cell instead (``_grid_cells``): memory linear in cell
+occupancy instead of quadratic in tile size. Every group goes through
+the same size-sorted chunks of one batched evaluator
+(``_adjacency_batched``) and one union-find, which stitches components
+across cell borders — the same fixpoint either way. Only a genuinely
+dense single-cell clique still errors (MAX_GROUP).
 """
 
 from __future__ import annotations
@@ -40,139 +43,31 @@ MERGE_SCHEMA = (
 )
 
 MAX_GROUP = 100_000  # defensive bound for one grid cell's candidate count
-# Above this many candidates in one tile, the O(n^2) full adjacency
-# matrix (n^2 bytes) is replaced by the grid-partitioned edge build
-# (_components_gridded): same components, memory bounded per cell.
+# Above this many candidates, a tile is split into PBSM grid-cell groups
+# (_grid_cells) instead of one n^2 adjacency group: same components,
+# memory bounded per cell.
 SPLIT_THRESHOLD = 4096
 GRID_CELL_PX = 1024
-
-
-def _adjacency_matrix(b: np.ndarray, dist_limit: int) -> np.ndarray:
-    """Vectorized P14 over all pairs: b is (n,4) [xmin,ymin,xmax,ymax]."""
-    x0, y0, x1, y1 = b[:, 0], b[:, 1], b[:, 2], b[:, 3]
-    # pairwise, a = rows (i), b = cols (j)
-    x_dist = np.minimum(
-        np.abs(x0[None, :] - x1[:, None]), np.abs(x1[None, :] - x0[:, None])
-    )
-    y_dist = np.minimum(
-        np.abs(y0[None, :] - y1[:, None]), np.abs(y1[None, :] - y0[:, None])
-    )
-    a_in_b = (
-        (x0[None, :] <= x0[:, None]) & (y0[None, :] <= y0[:, None])
-        & (x1[None, :] >= x1[:, None]) & (y1[None, :] >= y1[:, None])
-    )
-    b_in_a = a_in_b.T
-    x_close_a_covers = (x_dist <= dist_limit) & (
-        (y0[:, None] <= y0[None, :]) & (y1[:, None] >= y1[None, :])
-    )
-    y_close_a_covers = (y_dist <= dist_limit) & (
-        (x0[:, None] <= x0[None, :]) & (x1[:, None] >= x1[None, :])
-    )
-    adj = (
-        a_in_b | b_in_a
-        | x_close_a_covers | x_close_a_covers.T
-        | y_close_a_covers | y_close_a_covers.T
-    )
-    np.fill_diagonal(adj, False)
-    return adj
-
-
-def _components(adj: np.ndarray) -> np.ndarray:
-    """Union-find over a boolean adjacency matrix -> root label per node."""
-    n = adj.shape[0]
-    parent = np.arange(n)
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    rows, cols = np.nonzero(adj)
-    for i, j in zip(rows.tolist(), cols.tolist()):
-        if i < j:
-            ri, rj = find(i), find(j)
-            if ri != rj:
-                parent[max(ri, rj)] = min(ri, rj)
-    return np.array([find(i) for i in range(n)])
-
-
-def _components_gridded(
-    b: np.ndarray, dist_limit: int, cell: int = GRID_CELL_PX
-) -> np.ndarray:
-    """Mega-tile fallback: same components as
-    ``_components(_adjacency_matrix(b))`` without the O(n^2) matrix.
-
-    PBSM-style (like operators/spatial.grid_cell_intersect_join, the
-    J8 non-broadcast path): every P14-adjacent pair either intersects
-    (containment arm) or sits within ``dist_limit`` on one axis and
-    overlaps on the other (closeness arms), so the two boxes' bboxes
-    expanded by ``dist_limit`` always intersect — meaning the pair
-    co-occurs in at least one grid cell when each box registers in
-    every cell its expanded bbox overlaps. Adjacency then runs per
-    cell (bounded memory), and a single union-find over the union of
-    per-cell edges stitches components across cell borders.
-
-    A cell that still exceeds MAX_GROUP is a genuine ~dense clique in
-    one 1024-px neighborhood — that is an input pathology, not a
-    partitioning failure, and raises as before.
-    """
-    n = len(b)
-    cx0 = (b[:, 0] - dist_limit) // cell
-    cx1 = (b[:, 2] + dist_limit) // cell
-    cy0 = (b[:, 1] - dist_limit) // cell
-    cy1 = (b[:, 3] + dist_limit) // cell
-
-    cells: dict[tuple[int, int], list[int]] = {}
-    for i in range(n):
-        for gx in range(int(cx0[i]), int(cx1[i]) + 1):
-            for gy in range(int(cy0[i]), int(cy1[i]) + 1):
-                cells.setdefault((gx, gy), []).append(i)
-
-    parent = np.arange(n)
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    for members in cells.values():
-        m = len(members)
-        if m < 2:
-            continue
-        if m > MAX_GROUP:
-            raise ValueError(
-                f"grid cell holds {m} merge candidates (> {MAX_GROUP}); "
-                "input is a dense clique — pre-aggregate this tile"
-            )
-        idx = np.asarray(members)
-        adj = _adjacency_matrix(b[idx], dist_limit)
-        rows, cols = np.nonzero(adj)
-        for a, c in zip(idx[rows].tolist(), idx[cols].tolist()):
-            if a < c:
-                ra, rc = find(a), find(c)
-                if ra != rc:
-                    parent[max(ra, rc)] = min(ra, rc)
-    return np.array([find(i) for i in range(n)])
-
 
 _OUT_COLS = (
     "tile_key", "tile_name", "component_id", "object_class", "image_names",
     "gxmin", "gymin", "gxmax", "gymax", "n_members", "merged_bbox",
 )
 
-# Max padded (tile, i, j) cells per batched-adjacency chunk: bounds the
-# chunk's numpy allocations (~8 MB per float64 intermediate) regardless
-# of how many tiles a partition holds.
-_CELL_BUDGET = 1 << 20
+# Max padded (group, i, j) cells per batched-adjacency chunk: bounds the
+# chunk's numpy allocations (~1 MB per int32 intermediate) regardless
+# of how many groups a partition holds.
+_CELL_BUDGET = 1 << 18
 
 
 def _adjacency_batched(p: np.ndarray, dist_limit: int) -> np.ndarray:
-    """``_adjacency_matrix`` with a leading tile axis: ``p`` is
-    (T, m, 4) padded boxes; returns (T, m, m). Axis -2 is i (rows),
-    axis -1 is j (cols), mirroring the 2-D form term for term —
-    tests/test_merge_properties.py pins batched == per-tile."""
+    """Vectorized P14 over all pairs within each group: ``p`` is
+    (T, m, 4) padded [xmin, ymin, xmax, ymax] boxes; returns (T, m, m).
+    Axis -2 is box a (rows), axis -1 is box b (cols); the six arms are
+    the reference's calc_sim (src/form_calcs.py:716-750) and
+    ``spatial.adjacency_predicate`` term for term. One group is
+    ``p[None]``; tests/test_merge_properties.py pins that form against
+    a scalar calc_sim."""
     x0, y0, x1, y1 = p[..., 0], p[..., 1], p[..., 2], p[..., 3]
     x_dist = np.minimum(
         np.abs(x0[:, None, :] - x1[:, :, None]), np.abs(x1[:, None, :] - x0[:, :, None])
@@ -198,24 +93,83 @@ def _adjacency_batched(p: np.ndarray, dist_limit: int) -> np.ndarray:
     )
 
 
+def _grid_cells(b: np.ndarray, dist_limit: int) -> tuple[np.ndarray, np.ndarray]:
+    """Mega-tile groups: ``(members, bounds)`` with grid cell g's row
+    indices into ``b`` (ascending) at ``members[bounds[g]:bounds[g+1]]``
+    — the same layout as a partition's tile bounds.
+
+    PBSM-style (like operators/spatial.grid_cell_intersect_join, the
+    J8 non-broadcast path): every P14-adjacent pair either intersects
+    (containment arm) or sits within ``dist_limit`` on one axis and
+    overlaps on the other (closeness arms), so the two boxes' bboxes
+    expanded by ``dist_limit`` always intersect — meaning the pair
+    co-occurs in at least one grid cell when each box registers in
+    every cell its expanded bbox overlaps. Adjacency per cell then
+    finds every edge of the tile with bounded memory, and the caller's
+    one union-find stitches components across cell borders.
+
+    A cell that still exceeds MAX_GROUP is a genuine ~dense clique in
+    one 1024-px neighborhood — that is an input pathology, not a
+    partitioning failure, and raises.
+    """
+    cell = GRID_CELL_PX
+    cx0 = (b[:, 0] - dist_limit) // cell
+    cy0 = (b[:, 1] - dist_limit) // cell
+    ny = (b[:, 3] + dist_limit) // cell - cy0 + 1
+    per_box = ((b[:, 2] + dist_limit) // cell - cx0 + 1) * ny
+    # one registration per (box, overlapped cell): box rows[r] takes the
+    # k-th cell of its expanded-bbox cell range, row-major
+    rows = np.repeat(np.arange(len(b)), per_box)
+    k = np.arange(len(rows)) - np.repeat(np.cumsum(per_box) - per_box, per_box)
+    gx = cx0[rows] + k // ny[rows]
+    gy = cy0[rows] + k % ny[rows]
+    order = np.lexsort((rows, gy, gx))
+    gx, gy = gx[order], gy[order]
+    bounds = np.flatnonzero(np.r_[True, (gx[1:] != gx[:-1]) | (gy[1:] != gy[:-1]), True])
+    m = int(np.diff(bounds).max())
+    if m > MAX_GROUP:
+        raise ValueError(
+            f"grid cell holds {m} merge candidates (> {MAX_GROUP}); "
+            "input is a dense clique — pre-aggregate this tile"
+        )
+    return rows[order], bounds
+
+
 def _component_labels(boxes_all: np.ndarray, bounds: np.ndarray, dist_limit: int) -> np.ndarray:
     """Component label (min member row index) for every row of a
-    tile-sorted partition, all tiles at once.
+    tile-sorted partition (tile t is rows ``bounds[t]:bounds[t+1]``),
+    all tiles at once.
 
-    Replaces the per-tile ``_components(_adjacency_matrix(...))`` loop:
-    at ~10 rows/tile that loop ran ~10 small numpy ops per TILE (~60 us
-    x 20k tiles = the partition's dominant Python cost, measured 1.9 s
-    single-thread at sf0.1). Here size-sorted CHUNKS of tiles get one
-    padded (T, m, m) adjacency evaluation (guide §4.2: hand whole
-    batches to vectorized code), a single union-find consumes the
-    sparse edge list, and labels come from vectorized pointer-jumping.
-    Labels are identical: the union rule (larger root under smaller)
-    makes every component's root its minimum member index regardless
-    of edge order, which is exactly what the per-tile form emitted
-    (local min + slice offset). Mega-tiles (> SPLIT_THRESHOLD) keep
-    the bounded-memory gridded edge build.
+    The unit of work is a group of row indices whose every pair gets
+    the P14 test. Each tile of 2..SPLIT_THRESHOLD rows is one group, a
+    run of ``arange(n)``; a larger tile contributes one group per PBSM
+    grid cell (``_grid_cells``), so its memory stays bounded by cell
+    occupancy. Groups are sorted by size and cut into chunks, each one
+    padded (T, m, m) ``_adjacency_batched`` evaluation — per-group
+    numpy calls at ~10 rows per tile cost far more than the arithmetic.
+    A single union-find consumes every chunk's sparse edge list, and
+    labels come from vectorized pointer-jumping. The union rule (larger
+    root under smaller) makes every component's root its minimum member
+    row index regardless of edge order, so labels depend neither on the
+    chunking nor on whether a tile was split into cells.
     """
-    parent = np.arange(len(boxes_all))
+    n = len(boxes_all)
+    tile_sizes = np.diff(bounds)
+    mega = tile_sizes > SPLIT_THRESHOLD
+    # groups: members[starts[g] : starts[g] + sizes[g]]; mega-tiles are
+    # zero-size tile groups plus their cells, appended after arange(n)
+    members, starts, sizes = [np.arange(n)], [bounds[:-1]], [np.where(mega, 0, tile_sizes)]
+    offset = n
+    for t in np.flatnonzero(mega).tolist():
+        s, e = int(bounds[t]), int(bounds[t + 1])
+        cell_rows, cell_bounds = _grid_cells(boxes_all[s:e], dist_limit)
+        members.append(s + cell_rows)
+        starts.append(offset + cell_bounds[:-1])
+        sizes.append(np.diff(cell_bounds))
+        offset += len(cell_rows)
+    members, starts, sizes = map(np.concatenate, (members, starts, sizes))
+
+    parent = np.arange(n)
 
     def find(i: int) -> int:
         while parent[i] != i:
@@ -223,35 +177,31 @@ def _component_labels(boxes_all: np.ndarray, bounds: np.ndarray, dist_limit: int
             i = parent[i]
         return i
 
-    starts = bounds[:-1]
-    sizes = np.diff(bounds)
     multi = np.flatnonzero(sizes > 1)
-    small = multi[sizes[multi] <= SPLIT_THRESHOLD]
-    # ascending size order: each chunk pads to ITS max tile size, so a
-    # lone big tile cannot inflate every small tile's padding
-    sm = small[np.argsort(sizes[small], kind="stable")]
+    # ascending size order: each chunk pads to ITS max group size, so a
+    # lone big group cannot inflate every small group's padding
+    order = multi[np.argsort(sizes[multi], kind="stable")]
     pos = 0
-    while pos < len(sm):
+    while pos < len(order):
         end = pos + 1
-        m_first = int(sizes[sm[pos]])
-        while end < len(sm):
-            m_next = int(sizes[sm[end]])
+        m_first = int(sizes[order[pos]])
+        while end < len(order):
+            m_next = int(sizes[order[end]])
             # cap chunk cells AND keep sizes within 2x of the chunk's
             # smallest so padding waste stays bounded
             if (end - pos + 1) * m_next * m_next > _CELL_BUDGET or m_next > 2 * m_first:
                 break
             end += 1
-        chunk = sm[pos:end]
+        chunk = order[pos:end]
         pos = end
-        cs = starts[chunk]
-        m = int(sizes[chunk].max())
+        m = int(sizes[chunk[-1]])
         k = np.arange(m)
         valid = k[None, :] < sizes[chunk][:, None]
-        idx = np.where(valid, cs[:, None] + k[None, :], 0)
+        idx = members[np.where(valid, starts[chunk][:, None] + k[None, :], 0)]
         adj = _adjacency_batched(boxes_all[idx], dist_limit)
-        pair_ok = valid[:, :, None] & valid[:, None, :] & (k[:, None] < k[None, :])
-        t, i, j = np.nonzero(adj & pair_ok)
-        for a, b in zip((cs[t] + i).tolist(), (cs[t] + j).tolist()):
+        # valid is a prefix per group, so a valid j > i implies a valid i
+        t, i, j = np.nonzero(adj & valid[:, None, :] & (k[:, None] < k[None, :]))
+        for a, b in zip(idx[t, i].tolist(), idx[t, j].tolist()):
             ra, rb = find(a), find(b)
             if ra != rb:
                 parent[max(ra, rb)] = min(ra, rb)
@@ -262,9 +212,6 @@ def _component_labels(boxes_all: np.ndarray, bounds: np.ndarray, dist_limit: int
         if np.array_equal(hop, parent):
             break
         parent = hop
-    for ti in multi[sizes[multi] > SPLIT_THRESHOLD].tolist():
-        s, e = int(starts[ti]), int(bounds[ti + 1])
-        parent[s:e] = s + _components_gridded(boxes_all[s:e], dist_limit)
     return parent
 
 
@@ -272,7 +219,7 @@ def _merge_partition(batches, dist_limit: int):
     """mapInPandas body: all tiles hash-assigned to this partition.
 
     One Python/Arrow round trip per partition (not per tile) — the
-    per-tile work is a numpy adjacency + union-find over n_tile boxes.
+    partition's tiles are labelled together by ``_component_labels``.
     Memory bound: one shuffle partition of candidate rows.
 
     Output is assembled in two paths: singleton components (the vast
@@ -299,7 +246,7 @@ def _merge_partition(batches, dist_limit: int):
     tnames = pdf["tile_name"].to_numpy()
 
     # Component labels, globally unique across tiles (= min member row
-    # index): batched adjacency over size-sorted tile chunks + one
+    # index): batched adjacency over size-sorted group chunks + one
     # union-find, see _component_labels.
     comp_global = _component_labels(boxes_all, bounds, dist_limit)
 

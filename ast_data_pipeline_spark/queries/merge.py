@@ -57,8 +57,8 @@ FROM ({_MERGE_ORACLE})
     doc="A1 greedy bbox merge as deterministic per-tile connected "
     "components (ref: src/form_calcs.py:753-792; greedy order-dependence "
     "replaced by the fixpoint, class conflicts -> undefined_object as "
-    "intended by :782-783). Spark: groupBy(tile).applyInPandas; oracle: "
-    "recursive-CTE connected components in DuckDB.",
+    "intended by :782-783). Spark: repartition(tile_key).mapInPandas; "
+    "oracle: recursive-CTE connected components in DuckDB.",
     tags=("domain", "merge", "bench"),
 )
 def d_a1_bbox_merge(spark, sf_dir):
