@@ -129,5 +129,10 @@ def fmt7(col: Column | str) -> Column:
     values with zero byte diffs (OPTIMIZATION_r15.md) and pinned by
     tests/test_value_parity.py::test_fmt7_matches_format_string; the
     oracle side keeps printf('%.7f', ...) untouched.
+
+    Scope: fmt7 is legal only where the q7 snap is (the SCOPE note
+    above: pure arithmetic on bit-identical inputs, such as the
+    flagship lon/lats), never at the ln/log2/pow quantizer sites,
+    which keep the '%.7f' format recipe.
     """
     return q7(col).cast("decimal(18,7)").cast("string")

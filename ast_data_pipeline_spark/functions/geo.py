@@ -1,12 +1,18 @@
-"""P9 — UTM <-> WGS84 reprojection as a vectorized pandas UDF.
+"""P9 — UTM <-> WGS84 reprojection.
 
 The reference calls pyproj per point (src/form_calcs.py:288-307,
 re-constructing the Transformer inside the loop — an anti-pattern the
 SURVEY flags). pyproj is not available in this environment, so the
 engine implements the standard Snyder/USGS transverse-Mercator series
-(public-domain formulas, USGS Professional Paper 1395) vectorized in
-numpy: one Arrow batch per partition, all zones handled in one pass
-via per-row central meridians.
+(public-domain formulas, USGS Professional Paper 1395), all zones in
+one pass via per-row central meridians. The inverse (UTM -> lon/lat)
+that the pipeline runs is :func:`with_utm_lonlat`: native column
+expressions staged as named columns, so it runs inside whole-stage
+codegen with no Python worker. :func:`utm_lonlat_staged_sql` is its
+bit-identical DuckDB mirror for the oracles, and
+:func:`utm_to_lonlat_np` its numpy twin for the tests. The forward
+direction (:func:`lonlat_to_utm_udf`, an Arrow-batched pandas UDF over
+:func:`lonlat_to_utm_np`) is the verification leg of the roundtrip.
 
 EPSG:269xx (NAD83 / UTM zone xx N) uses the GRS80 ellipsoid; NAD83
 and WGS84 agree to well under the 0.6 m pixel size, so the engine
@@ -185,82 +191,6 @@ def lonlat_to_utm_np(lon: np.ndarray, lat: np.ndarray, zone: np.ndarray):
     return easting, northing
 
 
-def utm_to_lonlat_cols(easting, northing, zone):
-    """Inverse transverse Mercator as NATIVE column expressions — the
-    same Snyder series as :func:`utm_to_lonlat_np`, but built from
-    ``pyspark.sql.functions`` so the reprojection runs inside
-    whole-stage codegen: no Python worker, no Arrow hop, and Catalyst
-    can pipeline it with the surrounding projections.
-
-    Returns ``(lon_col, lat_col)`` in degrees as one self-contained
-    expression pair. NOTE: inlining these into a wide projection
-    duplicates the whole series per consumer (observed 4x slowdown in
-    the flagship when six lon/lat outputs each re-derived phi1/d) —
-    DataFrame callers should use :func:`with_utm_lonlat`, which stages
-    the shared subterms as named columns so each is computed once.
-    Even alone the pair is one tree of ~3e6 nodes once Catalyst copies
-    each shared subterm at every use, so planning it takes minutes and
-    GBs of driver heap. Double-precision math throughout; trig comes
-    from the deterministic :func:`psin_col`/:func:`pcos_col`
-    polynomials (plus the double-angle recurrences for sin 2mu..8mu),
-    so the result is BIT-identical to the DuckDB mirror on every
-    input — no libm at the boundary (r12; see the module-level trig
-    note).
-    """
-    sqrt1e2 = math.sqrt(1 - _E2)
-    e1 = (1 - sqrt1e2) / (1 + sqrt1e2)
-    x = easting - F.lit(_FALSE_EASTING)
-    # ONE division by the fused constant — the same op order as
-    # with_utm_lonlat and the SQL mirror's MU_DEN (ADVICE r12: the
-    # previous two-division form (n/_K0)/(A*...) could differ in the
-    # last ulp of mu from the staged/mirror path, silently voiding the
-    # bit-identity claim below for anyone hash-gating this form).
-    mu = northing / F.lit(_K0 * _A * (1 - _E2 / 4 - 3 * _E2**2 / 64 - 5 * _E2**3 / 256))
-    smu, cmu = psin_col(mu), pcos_col(mu)
-    sin2 = F.lit(2.0) * (smu * cmu)
-    cos2 = F.lit(1.0) - F.lit(2.0) * (smu * smu)
-    sin4 = F.lit(2.0) * (sin2 * cos2)
-    cos4 = F.lit(1.0) - F.lit(2.0) * (sin2 * sin2)
-    sin6 = sin4 * cos2 + cos4 * sin2
-    sin8 = F.lit(2.0) * (sin4 * cos4)
-    phi1 = (
-        mu
-        + F.lit(3 * e1 / 2 - 27 * e1**3 / 32) * sin2
-        + F.lit(21 * e1**2 / 16 - 55 * e1**4 / 32) * sin4
-        + F.lit(151 * e1**3 / 96) * sin6
-        + F.lit(1097 * e1**4 / 512) * sin8
-    )
-    sin1 = psin_col(phi1)
-    cos1 = pcos_col(phi1)
-    tan1 = sin1 / cos1
-    c1 = F.lit(_EP2) * cos1 * cos1
-    t1 = tan1 * tan1
-    one_m_e2sin2 = F.lit(1.0) - F.lit(_E2) * sin1 * sin1
-    sq = F.sqrt(one_m_e2sin2)
-    n1 = F.lit(_A) / sq
-    # x^1.5 as sqrt(x)^3: sqrt and * are IEEE-exact in every engine,
-    # while pow() is only ~1-ulp — this keeps the series bit-identical
-    # across Spark and the DuckDB oracle mirror (utm_lonlat_staged_sql)
-    r1 = F.lit(_A * (1 - _E2)) / (sq * sq * sq)
-    d = x / (n1 * F.lit(_K0))
-    d2 = d * d
-    d4 = d2 * d2
-    lat = phi1 - (n1 * tan1 / r1) * (
-        d2 / 2
-        - (F.lit(5.0) + 3 * t1 + 10 * c1 - 4 * c1 * c1 - F.lit(9 * _EP2)) * d4 / 24
-        + (F.lit(61.0) + 90 * t1 + 298 * c1 + 45 * t1 * t1 - F.lit(252 * _EP2) - 3 * c1 * c1)
-        * (d4 * d2) / 720
-    )
-    lon0 = F.radians(zone.cast("double") * 6.0 - 183.0)
-    lon = lon0 + (
-        d
-        - (F.lit(1.0) + 2 * t1 + c1) * (d2 * d) / 6
-        + (F.lit(5.0) - 2 * c1 + 28 * t1 - 3 * c1 * c1 + F.lit(8 * _EP2) + 24 * t1 * t1)
-        * (d4 * d) / 120
-    ) / cos1
-    return F.degrees(lon), F.degrees(lat)
-
-
 def with_utm_lonlat(df, out_lon: str, out_lat: str, easting, northing, zone):
     """Append ``out_lon``/``out_lat`` (degrees) to ``df`` from UTM
     coordinates, staging the Snyder-series subterms (phi1, trig, d, …)
@@ -344,20 +274,6 @@ def with_utm_lonlat(df, out_lon: str, out_lat: str, easting, northing, zone):
     df = df.withColumns({out_lon: F.degrees(lon), out_lat: F.degrees(lat)})
     return df.drop(mu, smu, cmu, sin2, cos2, sin4, cos4,
                    phi1, sin1, cos1, tan1, c1, t1, n1, d)
-
-
-_LONLAT_SCHEMA = StructType(
-    [StructField("lon", DoubleType()), StructField("lat", DoubleType())]
-)
-
-
-@F.pandas_udf(_LONLAT_SCHEMA)
-def utm_to_lonlat_udf(easting: pd.Series, northing: pd.Series, zone: pd.Series) -> pd.DataFrame:
-    lon, lat = utm_to_lonlat_np(
-        easting.to_numpy(np.float64), northing.to_numpy(np.float64),
-        zone.to_numpy(np.float64),
-    )
-    return pd.DataFrame({"lon": lon, "lat": lat})
 
 
 _UTM_SCHEMA = StructType(

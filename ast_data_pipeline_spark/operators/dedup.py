@@ -344,126 +344,55 @@ def simhash_pairs(sig: DataFrame, max_hamming: int, doc_col: str = "doc_id") -> 
     )
 
 
-def neardup_clusters(
-    pairs: DataFrame,
-    a: str = "doc_a",
-    b: str = "doc_b",
-    max_iters: int = 20,
-) -> DataFrame:
-    """Connected components over near-dup pairs -> one cluster id per
-    doc (min doc_id reachable), the canonical-representative step that
-    turns pairwise near-dup detection into an actual dedup decision
-    (keep ``is_canonical``, drop the rest) — the corpus-dedup final
-    pass in C4/RefinedWeb-style pipelines.
-
-    Distributed hash-min label propagation (the textbook MapReduce CC
-    algorithm): every doc starts labeled with itself; each round takes
-    the min label over neighbors; fixpoint in O(component diameter)
-    rounds. Near-dup components are shallow (dense cliques of
-    mutations of one document), so the loop converges in a few rounds;
-    a pathological chain is bounded by ``max_iters``. Per round: one
-    join + one agg shuffle on the edge list; ``localCheckpoint`` cuts
-    the lineage so round k does not recompute rounds 1..k-1 (the same
-    guard MLlib uses in iterative algorithms). Convergence is detected
-    from ``sum(lbl)`` — labels only ever decrease, so an unchanged sum
-    is a fixpoint; the per-round driver traffic is that single scalar.
-    At 100 TB the same loop runs with the edge list hash-partitioned
-    on src (the join and the groupBy share that partitioning); the
-    large-star/small-star variant would bound rounds at O(log n) if
-    diameters ever grew.
-    """
-    sym = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .union(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .transform(lineage_cut)
-    )
-    labels = (
-        sym.select(F.col("src").alias("id")).distinct()
-        .withColumn("lbl", F.col("id"))
-        .transform(lineage_cut)
-    )
-    prev = labels.agg(F.sum("lbl")).collect()[0][0]
-    converged = False
-    for _ in range(max_iters):
-        nmin = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("lbl").alias("nlbl"))
-        )
-        labels = (
-            labels.join(nmin, labels["id"] == nmin["src"], "left")
-            .select(
-                labels["id"],
-                F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
-            )
-            .transform(lineage_cut)
-        )
-        cur = labels.agg(F.sum("lbl")).collect()[0][0]
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        # Silent non-convergence would return labels that diverge from
-        # the recursive-CTE oracle on a long-chain pair graph (r3
-        # ADVICE) — fail loudly so the mismatch is diagnosable here.
-        raise RuntimeError(
-            f"neardup_clusters: no fixpoint after {max_iters} rounds — "
-            "a component's diameter exceeds max_iters; raise max_iters "
-            "or switch to the large-star/small-star O(log n) variant"
-        )
-    sizes = labels.groupBy("lbl").agg(F.count(F.lit(1)).alias("n_cluster_docs"))
-    return labels.join(sizes, "lbl").select(
-        F.col("id").alias("doc_id"),
-        F.col("lbl").alias("cluster_id"),
-        "n_cluster_docs",
-        (F.col("id") == F.col("lbl")).alias("is_canonical"),
-    )
-
-
 def neardup_clusters_star(
     pairs: DataFrame,
     a: str = "doc_a",
     b: str = "doc_b",
     max_iters: int = 30,
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14 — public algorithm): same output contract as
-    :func:`neardup_clusters`, but convergence is O(log n) ROUNDS
-    REGARDLESS of component diameter, where hash-min label propagation
-    needs O(diameter) rounds. This is the 100 TB hardening path the
-    hash-min docstring names: near-dup components are usually shallow
-    cliques (hash-min wins on constant factors), but one adversarial
-    chain — e.g. a template document mutating gradually across a crawl
-    — stalls hash-min past any fixed iteration cap, while the star
-    rounds collapse it geometrically (pytest: 64-chain converges in 4
-    rounds where hash-min needs 63).
+    """Connected components over near-dup pairs -> one cluster id per
+    doc (min doc_id reachable), the canonical-representative step that
+    turns pairwise near-dup detection into an actual dedup decision
+    (keep ``is_canonical``, drop the rest) — the corpus-dedup final
+    pass in C4/RefinedWeb-style pipelines. Every doc named in
+    ``pairs`` gets a row; a self-pair ``(a, a)`` alone makes ``a`` a
+    singleton cluster.
+
+    Alternating large-star / small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14 — public algorithm):
+    convergence is O(log n) ROUNDS regardless of component diameter,
+    where label propagation needs O(diameter). Near-dup components are
+    usually shallow cliques, but one adversarial chain — e.g. a
+    template document mutating gradually across a crawl — would stall
+    a diameter-bound loop, while the star rounds collapse it
+    geometrically (pytest: a 64-chain converges within 10 rounds).
 
     Per round: large-star hooks every neighbor v > u onto u's minimum
     (keeps big stars flat), small-star re-points every v < u at that
     minimum. Both are one groupBy + one join on the edge list; edges
     stay (high, low)-normalized between rounds, and ``localCheckpoint``
-    cuts the per-round lineage exactly as in the hash-min loop. The
-    fixpoint probe is one (count, xxhash-sum) row per round — constant
-    driver traffic. At the fixpoint the edge list IS the star graph
-    (node -> component minimum).
+    cuts the per-round lineage so round k never recomputes rounds
+    1..k-1. The fixpoint probe is one (count, xor of xxhash64) row
+    per round — constant driver traffic. At the fixpoint the edge list IS
+    the star graph (node -> component minimum).
     """
-    edges = (
+    norm = (
         pairs.select(
             F.greatest(F.col(a), F.col(b)).alias("u"),
             F.least(F.col(a), F.col(b)).alias("v"),
         )
-        .filter(F.col("u") != F.col("v"))
         .distinct()
         .transform(lineage_cut)
     )
+    # nodes come from the input pairs, before the self-loop filter, so
+    # a doc seen only in a self-pair still gets its singleton row
     nodes = (
-        edges.select(F.col("u").alias("id"))
-        .union(edges.select(F.col("v").alias("id")))
+        norm.select(F.col("u").alias("id"))
+        .union(norm.select(F.col("v").alias("id")))
         .distinct()
         .transform(lineage_cut)
     )
+    edges = norm.filter(F.col("u") != F.col("v"))
     # (count, xor-of-hashes): order-independent, never overflows (an
     # ANSI-mode sum of xxhash64 longs does), and duplicate-free edges
     # can't cancel

@@ -111,14 +111,3 @@ def curate(spark: SparkSession, docs: DataFrame) -> DataFrame:
     # degrades to the pre-r14 SMJ, losing nothing.
     kept = exact.join(F.broadcast(losers), "doc_id", "left_anti")
     return kept.select("doc_id", "lang", "source", "quality_score", "n_tokens")
-
-
-def curation_report(spark: SparkSession, docs: DataFrame) -> DataFrame:
-    """Attrition ledger: rows surviving each stage."""
-    kept = curate(spark, docs)
-    n_total = docs.count()
-    n_kept = kept.count()
-    return spark.createDataFrame(
-        [("input", n_total), ("kept", n_kept), ("dropped", n_total - n_kept)],
-        "stage string, n long",
-    )

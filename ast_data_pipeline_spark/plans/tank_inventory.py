@@ -104,8 +104,7 @@ def _tank_inventory_plan(spark: SparkSession, sf_dir: str, dist_limit: int) -> D
     # 5. WGS84 (P9) on the post-argmax rows: native-column Snyder
     #    series for centroid + both corners — stays inside whole-stage
     #    codegen (no Python/Arrow hop). Staged form: each point's
-    #    series subterms are computed once (utm_to_lonlat_udf remains
-    #    for callers needing a struct).
+    #    series subterms are computed once.
     zone = zone_from_epsg(F.col("utm_projection"))
     located = with_utm_lonlat(located, "centroid_lon", "centroid_lat", F.col("centroid_x"), F.col("centroid_y"), zone)
     located = with_utm_lonlat(located, "nw_lon", "nw_lat", F.col("utm_minx"), F.col("utm_maxy"), zone)

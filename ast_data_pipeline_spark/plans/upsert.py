@@ -14,6 +14,7 @@ overwrite on the key's bucket/date) instead of whole-table.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -32,12 +33,18 @@ def upsert_parquet_state(
 
     Read-modify-overwrite with an intermediate staging write (parquet
     has no transactions; Delta/Iceberg would replace this block with a
-    real MERGE INTO)."""
+    real MERGE INTO). A missing ``state_path`` means no table yet: the
+    batch becomes the table. Any other read or analysis error (e.g. a
+    batch whose columns do not match the table) raises before anything
+    is written."""
     try:
         existing = spark.read.parquet(state_path)
-        merged = upsert(existing, updates, key)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         merged = updates
+    else:
+        merged = upsert(existing, updates, key)
     staged = state_path.rstrip("/") + ".staging"
     merged.write.mode("overwrite").parquet(staged)
     spark.read.parquet(staged).write.mode("overwrite").parquet(state_path)

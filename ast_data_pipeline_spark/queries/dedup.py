@@ -15,7 +15,7 @@ from ..operators.dedup import (
     minhash_base_sql,
     minhash_hash_i_sql,
     minhash_neardup_compact,
-    neardup_clusters,
+    neardup_clusters_star,
     simhash32,
     simhash_pairs,
     word_shingles,
@@ -220,40 +220,15 @@ FROM lbl JOIN sizes ON lbl.comp = sizes.comp"""
     "x_dedup_clusters",
     oracle=_clusters_oracle(),
     doc="Near-dup clustering: connected components over the MinHash+LSH "
-    "pair graph via distributed hash-min label propagation "
-    "(operators/dedup.neardup_clusters) -> cluster id = min reachable "
-    "doc_id, cluster sizes, and the canonical-representative flag that "
+    "pair graph via alternating large-star/small-star rounds "
+    "(operators/dedup.neardup_clusters_star, Kiveris et al. SoCC'14; "
+    "O(log n) rounds whatever the component diameter) -> cluster id = "
+    "min reachable doc_id, cluster sizes, and the canonical flag that "
     "turns pairwise detection into a dedup decision. Oracle: the same "
     "pair CTEs extended with a recursive-CTE transitive closure.",
     tags=("dedup", "extension"),
 )
 def x_dedup_clusters(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").withColumn("w", words_col(F.col("text")))
-    docsets = (
-        docs.filter(F.size("w") >= 2)
-        .select("doc_id", word_shingles("w", 2))
-    )
-    pairs = minhash_neardup_compact(docsets, NUM_HASHES, ROWS_PER_BAND, JACCARD_T)
-    return neardup_clusters(pairs)
-
-
-@register(
-    "x_dedup_clusters_star",
-    oracle=_clusters_oracle(),
-    doc="Near-dup clustering, O(log n)-round variant: connected "
-    "components over the same MinHash+LSH pair graph via alternating "
-    "large-star/small-star (operators/dedup.neardup_clusters_star, "
-    "Kiveris et al. SoCC'14) — the 100 TB hardening of hash-min label "
-    "propagation, whose round count is bounded by component DIAMETER "
-    "and stalls on adversarial chains (a template document mutating "
-    "across a crawl). Same output contract and the same recursive-CTE "
-    "oracle as x_dedup_clusters, so the driver row proves the two "
-    "algorithms agree exactly.",
-    tags=("dedup", "extension"),
-)
-def x_dedup_clusters_star(spark, sf_dir):
-    from ..operators.dedup import neardup_clusters_star
-
     docs = load(spark, sf_dir, "documents").withColumn("w", words_col(F.col("text")))
     docsets = (
         docs.filter(F.size("w") >= 2)
@@ -1231,7 +1206,7 @@ FROM r"""
     "x_dedup_keep_best",
     oracle=_keep_best_oracle(),
     # Canonical selection: pairwise near-dup detection (MinHash+LSH)
-    # and clustering (hash-min CC) decide WHICH docs are copies;
+    # and clustering (large-/small-star CC) decide WHICH docs are copies;
     # this decides which copy SURVIVES — the highest quality-score
     # doc per cluster (ties -> lowest doc_id), everything else marked
     # for drop. min-doc_id canonicals (x_dedup_clusters) keep an
@@ -1257,7 +1232,7 @@ def x_dedup_keep_best(spark, sf_dir):
         .select("doc_id", word_shingles("w", 2))
     )
     pairs = minhash_neardup_compact(docsets, NUM_HASHES, ROWS_PER_BAND, JACCARD_T)
-    clusters = neardup_clusters(pairs).select("doc_id", "cluster_id")
+    clusters = neardup_clusters_star(pairs).select("doc_id", "cluster_id")
     q = docs.select("doc_id", quality_score("w", F.col("text")).alias("quality_score"))
     w_rank = Window.partitionBy("cluster_id").orderBy(
         F.col("quality_score").desc(), "doc_id"

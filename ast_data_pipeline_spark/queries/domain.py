@@ -473,69 +473,3 @@ def d_reproject_roundtrip(spark, sf_dir):
         F.count(F.lit(1)).alias("n_points"),
         F.count(F.when(F.col("err_m") < 1e-3, 1)).alias("n_within_tol"),
     ).withColumn("roundtrip_ok", F.col("n_points") == F.col("n_within_tol"))
-
-
-@register(
-    "x_udtf_chip_grid",
-    # The P4 chip-grid enumeration re-expressed through the Spark 4
-    # Python UDTF API (pyspark.sql.functions.udtf): one input row per
-    # tile LATERAL-expands to its chips via a user-defined TABLE
-    # function — the row-to-rows API face next to explode (built-in),
-    # mapInPandas (Arrow batches), and DataSource (formats). Grid
-    # arithmetic and the reference's `>`-clamp (src/form_calcs.py:
-    # 506-509) match the images view exactly, so the oracle is the
-    # same images-CTE projection d_chip_grid uses. At scale the UDTF
-    # runs per-partition like any lateral generator; Python-side
-    # per-row cost is the price of the API (explode stays the hot
-    # path — that IS the production choice, the UDTF face proves the
-    # surface).
-    oracle=with_domain(
-        """
-SELECT image_name, tile_name, row_index, col_index,
-       minx_px, miny_px, maxx_px, maxy_px
-FROM images
-""",
-        "images",
-    ),
-    doc="Chip-grid enumeration as a Python UDTF: lateral table "
-    "function over the tiles view yielding one row per chip with the "
-    "reference's clamp arithmetic — identical output to the "
-    "explode(sequence) images view, proving the UDTF API face on a "
-    "real operator.",
-    tags=("domain", "extension"),
-)
-def x_udtf_chip_grid(spark, sf_dir):
-    from pyspark.sql.functions import lit, udtf
-
-    from ..sources.domain_views import CHIP, tiles
-
-    @udtf(returnType=(
-        "image_name string, tile_name string, row_index int, col_index int, "
-        "minx_px int, miny_px int, maxx_px int, maxy_px int"
-    ))
-    class ChipGrid:
-        def eval(self, tile_name: str, tile_width: int, tile_height: int):
-            rows_n = (tile_height + CHIP - 1) // CHIP
-            cols_n = (tile_width + CHIP - 1) // CHIP
-            for r in range(rows_n):
-                for c in range(cols_n):
-                    yield (
-                        f"{tile_name}_{r:02d}_{c:02d}",
-                        tile_name,
-                        r,
-                        c,
-                        c * CHIP,
-                        r * CHIP,
-                        min((c + 1) * CHIP - 1, tile_width),
-                        min((r + 1) * CHIP - 1, tile_height),
-                    )
-
-    spark.udtf.register("chip_grid_udtf", ChipGrid)
-    t = tiles(spark, sf_dir).select("tile_name", "tile_width", "tile_height")
-    t.createOrReplaceTempView("udtf_tiles_in")
-    return spark.sql(
-        """
-        SELECT g.* FROM udtf_tiles_in t,
-        LATERAL chip_grid_udtf(t.tile_name, t.tile_width, t.tile_height) g
-        """
-    )

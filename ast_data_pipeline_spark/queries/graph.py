@@ -1,8 +1,8 @@
 """Graph analytics over the relational tables — iterative algorithms
 kept bit-exact across engines via fixed-point integer arithmetic.
 
-The near-dup clustering operator (operators/dedup.neardup_clusters)
-already covers connected components; this module adds the other
+The near-dup clustering operator
+(operators/dedup.neardup_clusters_star) already covers connected components; this module adds the other
 canonical distributed-graph workload, PageRank, expressed as plain
 DataFrame joins + aggregations (the GraphX/Pregel loop is just
 ``join edges -> groupBy dst -> sum`` per superstep — no RDDs needed).

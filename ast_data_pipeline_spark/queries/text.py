@@ -3392,9 +3392,8 @@ def x_prefix_cache_census(spark, sf_dir):
 
 @register(
     "x_udtf_ngrams",
-    # Spark 4 UDTF with a static analyze() — the DYNAMIC-SCHEMA face
-    # of the table-function API (x_udtf_chip_grid proves the fixed-
-    # schema face): the output schema (gram_1..gram_n columns) is
+    # Spark 4 UDTF with a static analyze() — the table-function API
+    # face of the registry: the output schema (gram_1..gram_n columns) is
     # computed at PLAN TIME from the literal n argument by analyze(),
     # the mechanism behind polymorphic table functions. The operator
     # itself is the n-gram explode every shingle/decontamination

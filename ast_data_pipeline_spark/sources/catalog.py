@@ -64,9 +64,3 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {t: load(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL-facing surface)."""
-    for t in TABLES:
-        load(spark, sf_dir, t).createOrReplaceTempView(t)

@@ -4,19 +4,12 @@ properties of the projection itself)."""
 
 from __future__ import annotations
 
-import os
-import pathlib
-import subprocess
-import sys
-
 import numpy as np
 
 from ast_data_pipeline_spark.functions.geo import (
     lonlat_to_utm_np,
     utm_to_lonlat_np,
 )
-
-REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
 def test_central_meridian_identity():
@@ -41,34 +34,9 @@ def test_roundtrip_inverse_forward():
     assert np.abs(n2 - n).max() < 1e-3
 
 
-# The unstaged utm_to_lonlat_cols pair is one expression tree of ~3e6
-# nodes (each shared subterm repeated at every use). Planning it over a
-# local relation evaluates it in the optimizer, where subexpression
-# elimination canonicalizes the whole tree and outgrows a default-sized
-# heap, so it runs in a session of its own with that pass off (the
-# arithmetic, and so the result, is the same either way).
-_UNSTAGED_SCRIPT = """
-import numpy as np
-import pandas as pd
-from pyspark.sql import functions as F
-
-from ast_data_pipeline_spark.functions.geo import utm_to_lonlat_cols
-from ast_data_pipeline_spark.session import get_spark
-
-src = np.load({src!r})
-spark = get_spark("geo-unstaged-test", shuffle_partitions=8)
-spark.conf.set("spark.sql.subexpressionElimination.enabled", "false")
-df = spark.createDataFrame(pd.DataFrame({{k: src[k] for k in ("e", "n", "z")}}))
-lon_c, lat_c = utm_to_lonlat_cols(F.col("e"), F.col("n"), F.col("z"))
-got = df.select(lon_c.alias("lon"), lat_c.alias("lat")).toPandas()
-np.savez({out!r}, lon=got["lon"].to_numpy(), lat=got["lat"].to_numpy())
-spark.stop()
-"""
-
-
-def test_native_cols_match_numpy(spark, tmp_path):
-    # the codegen'd column form must agree with the numpy reference
-    # far below pixel scale (both are double; JVM trig is 1-ulp)
+def test_native_cols_match_numpy(spark):
+    # the codegen'd staged column form must agree with the numpy
+    # reference far below pixel scale (both are double; JVM trig is 1-ulp)
     rng = np.random.RandomState(11)
     e = 400000.0 + rng.rand(300) * 200000.0
     n = 3300000.0 + rng.rand(300) * 1500000.0
@@ -76,32 +44,15 @@ def test_native_cols_match_numpy(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
-    src, out = tmp_path / "src.npz", tmp_path / "got.npz"
-    np.savez(src, e=e, n=n, z=z)
-    env = dict(os.environ)
-    env.setdefault("SPARK_GRAFT_CPUS", "2")
-    proc = subprocess.run(
-        [sys.executable, "-c", _UNSTAGED_SCRIPT.format(src=str(src), out=str(out))],
-        cwd=REPO,
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
-    assert proc.returncode == 0, proc.stderr[-4000:]
-    got = np.load(out)
-    lon, lat = utm_to_lonlat_np(e, n, z)
-    assert np.abs(got["lon"] - lon).max() < 1e-12
-    assert np.abs(got["lat"] - lat).max() < 1e-12
-
     from ast_data_pipeline_spark.functions.geo import with_utm_lonlat
 
+    lon, lat = utm_to_lonlat_np(e, n, z)
     df = spark.createDataFrame(pd.DataFrame({"e": e, "n": n, "z": z}))
     staged = with_utm_lonlat(df, "lon", "lat", F.col("e"), F.col("n"), F.col("z"))
-    got2 = staged.select("lon", "lat").toPandas()
+    got = staged.select("lon", "lat").toPandas()
     assert list(staged.columns) == ["e", "n", "z", "lon", "lat"]  # temps dropped
-    assert np.abs(got2["lon"].to_numpy() - lon).max() < 1e-12
-    assert np.abs(got2["lat"].to_numpy() - lat).max() < 1e-12
+    assert np.abs(got["lon"].to_numpy() - lon).max() < 1e-12
+    assert np.abs(got["lat"].to_numpy() - lat).max() < 1e-12
 
 
 def test_known_point():

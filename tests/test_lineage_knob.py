@@ -7,9 +7,9 @@ reliable ``DataFrame.checkpoint`` (survives executor death on a real
 cluster). Both modes must produce byte-identical results — the knob
 trades recovery for IO, never semantics.
 
-``x_dedup_clusters`` is the canary: its hash-min connected-components
-loop is the deepest iterative consumer of the cut helper (cuts inside
-every round plus the shared signature frame).
+``x_dedup_clusters`` is the canary: its large-star/small-star
+connected-components loop is the deepest iterative consumer of the cut
+helper (cuts inside every round plus the shared signature frame).
 """
 
 from __future__ import annotations

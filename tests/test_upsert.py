@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from ast_data_pipeline_spark.plans.upsert import (
@@ -33,6 +35,18 @@ def test_parquet_state_upsert_rounds(spark, tmp_path):
     upsert_parquet_state(spark, path, u2, "k")
     out2 = {(r.k, r.v) for r in spark.read.parquet(path).collect()}
     assert out2 == out
+
+
+def test_parquet_state_upsert_schema_mismatch_raises(spark, tmp_path):
+    # a batch missing a column must fail, not replace the whole table
+    # with the batch alone
+    path = str(tmp_path / "state")
+    spark.range(100).selectExpr("id AS k", "'a' AS v", "0L AS w").write.parquet(path)
+    before = sorted(map(tuple, spark.read.parquet(path).collect()))
+    bad = spark.createDataFrame([(1, "b")], "k long, v string")
+    with pytest.raises(AnalysisException):
+        upsert_parquet_state(spark, path, bad, "k")
+    assert sorted(map(tuple, spark.read.parquet(path).collect())) == before
 
 
 def test_stream_upsert_tracking(spark, sf_dir, tmp_path):

@@ -8,6 +8,9 @@ have had its module — or a shared dependency like
 without ever being re-graded. This tool makes staleness visible and
 produces the rotation order for the next round's window:
 
+0. **paper core** — ``flagship_tank_inventory``, then the ``d_*``,
+   ``a3_*`` and ``a8_*`` queries, pinned at the head whatever their
+   grade age so every budgeted window grades them;
 1. **never graded** — no green row in any ``CORRECTNESS_r*.json``;
 2. **stale** — some file in the query's import closure has a git
    commit NEWER than the round artifact that last graded it green
@@ -209,13 +212,21 @@ def audit() -> list[dict]:
     return rows
 
 
+def _core_rank(name: str) -> int:
+    """0 for the flagship, 1 for the rest of the paper core (the d_*
+    domain queries and a3/a8), 2 for everything else."""
+    if name == "flagship_tank_inventory":
+        return 0
+    return 1 if re.fullmatch(r"(?:d|a3|a8)_\w+", name) else 2
+
+
 def rotation_order(rows: list[dict]) -> list[str]:
     never = [r for r in rows if r["status"] == "never-graded"]
     stale = sorted((r for r in rows if r["status"] == "stale"),
                    key=lambda r: -r["age"])
     fresh = sorted((r for r in rows if r["status"] == "fresh"),
                    key=lambda r: (r["graded_round"], r["query"]))
-    return [r["query"] for r in never + stale + fresh]
+    return sorted((r["query"] for r in never + stale + fresh), key=_core_rank)
 
 
 _PRIORITY_HEADER = """\
@@ -226,9 +237,11 @@ _PRIORITY_HEADER = """\
 # query module imports registry.py, so keeping this regenerated-every-
 # round list inside registry.py marked every query's import closure
 # stale on each rotation and destroyed tools/grade_age.py's staleness
-# signal (VERDICT r10 "What's wrong" #1). Policy: never-driver-graded
-# queries first, then stale (import closure committed after last green
-# driver grade, most-stale first), then fresh greens oldest-grade-first.
+# signal (VERDICT r10 "What's wrong" #1). Policy: the paper core first
+# (flagship_tank_inventory, then the d_*, a3_* and a8_* queries), then
+# never-driver-graded queries, then stale (import closure committed
+# after last green driver grade, most-stale first), then fresh greens
+# oldest-grade-first; the core keeps that order among itself.
 """
 
 

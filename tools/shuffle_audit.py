@@ -102,7 +102,6 @@ def main() -> None:
             "x_power_iteration_pc1",
             "a_histogram_equidepth",
             "x_pc1_explained_variance",
-            "x_dedup_clusters_star",
             "x_triangle_count",
             "x_kcore_peel",
             "x_embedding_neardup",
