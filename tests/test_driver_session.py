@@ -38,3 +38,12 @@ def test_default_heap_fits_physical_ram(monkeypatch):
     assert int(heap[:-1]) * TEST_RUN_JVMS <= mem_total_mb()
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert driver_memory() == "3g"
+
+
+def test_heap_layout_scales_with_driver_memory():
+    from ast_data_pipeline_spark.session import heap_layout_options
+
+    assert heap_layout_options("4g") == "-Xms1024m -Xmn256m"
+    assert heap_layout_options("4096m") == heap_layout_options("4g")
+    assert heap_layout_options("64G") == "-Xms16384m -Xmn4096m"
+    assert heap_layout_options("2048") == "-Xms512m -Xmn128m"
