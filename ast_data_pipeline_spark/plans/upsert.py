@@ -3,20 +3,24 @@ the reference mutates its tracking array in place; the engine keeps a
 keyed table and upserts batches into it).
 
 ``upsert``: new rows win by key (anti-join the old side + union) — the
-standard MERGE emulation when a table format isn't available. The
-streaming face applies it per micro-batch via ``foreachBatch`` with an
-idempotent overwrite, giving exactly-once state for the tracking
-table / work queue.
+standard MERGE emulation when a table format isn't available.
+``upsert_parquet_state`` applies it to a parquet table with one
+full-table write plus a rename swap (``sinks.replace_parquet``). The
+streaming face applies it per micro-batch via ``foreachBatch``, giving
+exactly-once state for the tracking table / work queue.
 
-At scale the overwrite would be partition-scoped (dynamic partition
-overwrite on the key's bucket/date) instead of whole-table.
+On HDFS or a local disk the swap is two metadata renames. On an object
+store a rename is a copy of every file, so there a Delta/Iceberg
+``MERGE INTO`` (a partition-scoped rewrite with an atomic commit)
+replaces this block, as it would at scale anyway.
 """
 
 from __future__ import annotations
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..sources.sinks import replace_parquet
 
 
 def upsert(existing: DataFrame, updates: DataFrame, key: str) -> DataFrame:
@@ -31,12 +35,15 @@ def upsert_parquet_state(
 ) -> None:
     """Apply an upsert batch to a parquet-backed keyed table.
 
-    Read-modify-overwrite with an intermediate staging write (parquet
-    has no transactions; Delta/Iceberg would replace this block with a
-    real MERGE INTO). A missing ``state_path`` means no table yet: the
-    batch becomes the table. Any other read or analysis error (e.g. a
-    batch whose columns do not match the table) raises before anything
-    is written."""
+    The merged table is written once and swapped in for the old one
+    (``replace_parquet``): one write execution per call. A missing
+    ``state_path`` means no table yet: the batch becomes the table,
+    unless an interrupted swap left the table moved aside
+    (``InterruptedSwapError``). Any other read or analysis error (e.g.
+    a batch whose columns do not match the table) raises before
+    anything is written. ``updates`` may read ``state_path``, but must
+    be cut from it (``lineage_cut_lazy``, as ``allocate_round`` does)
+    if it is used again after the swap."""
     try:
         existing = spark.read.parquet(state_path)
     except AnalysisException as e:
@@ -45,9 +52,7 @@ def upsert_parquet_state(
         merged = updates
     else:
         merged = upsert(existing, updates, key)
-    staged = state_path.rstrip("/") + ".staging"
-    merged.write.mode("overwrite").parquet(staged)
-    spark.read.parquet(staged).write.mode("overwrite").parquet(state_path)
+    replace_parquet(merged, state_path)
 
 
 def stream_upsert_tracking(

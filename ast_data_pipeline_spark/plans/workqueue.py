@@ -4,10 +4,10 @@
 The reference keeps two npy arrays (remaining / labeled) and each
 round: slices the head of remaining, appends it to labeled, asserts
 allocated + remaining == unlabeled. Here the queue is a DataFrame and
-one round is pure transforms: deterministic-order ``limit`` (O3),
-``left_anti`` for the remainder (U2), ``unionByName`` append (U1),
-and a declarative integrity check (U4) that raises like the
-reference does.
+one round is: a deterministic-order ``limit`` (O3) cut once with
+``lineage_cut_lazy``, so its count, the ``left_anti`` remainder (U2)
+and any append or upsert (U1) share one top-k; and a declarative
+integrity check (U4) that raises like the reference does.
 """
 
 from __future__ import annotations
@@ -25,8 +25,11 @@ def allocate_round(
 
     Order stability comes from the explicit sort key — the reference
     relies on array order, which a distributed table does not have.
+    ``allocated`` is lineage-cut: the top-k runs once, on its first
+    action, and the batch stays pinned after ``remaining``'s source
+    is rewritten (e.g. by ``upsert_parquet_state``).
     """
-    allocated = remaining.orderBy(key).limit(n)
+    allocated = remaining.orderBy(key).limit(n).transform(lineage_cut_lazy)
     rest = remaining.join(allocated, key, "left_anti")
     return allocated, rest
 
@@ -52,7 +55,8 @@ def run_rounds(queue: DataFrame, key: str, n: int, rounds: int) -> DataFrame:
     them the anti-join chain deepens by one join per round and every
     per-round count re-executes the whole chain from the scan — round
     R paid O(R) joins, the integrity check another O(R), and the final
-    counts a third. With the cuts each frame is computed once; the
+    counts a third. ``allocate_round`` cuts the allocated head; the
+    loop cuts the remainder. Each frame is computed once; the
     integrity counts double as the materialization, so the summary
     needs no extra jobs.
     """
@@ -63,7 +67,6 @@ def run_rounds(queue: DataFrame, key: str, n: int, rounds: int) -> DataFrame:
     n_r = pool
     for r in range(1, rounds + 1):
         allocated, remaining = allocate_round(remaining, n, key)
-        allocated = allocated.transform(lineage_cut_lazy)
         remaining = remaining.transform(lineage_cut_lazy)
         n_alloc, n_r = check_integrity(allocated, remaining, pool)
         pool -= n_alloc

@@ -3,8 +3,10 @@
 - K1 CSV report sink: tiny report tables -> single CSV (the reference
   writes pandas .to_csv; we coalesce(1) since reports are small by
   construction — never used for large outputs).
-- K2 queue snapshot: parquet overwrite keyed by round (replaces the
-  reference's np.save, src/az_proc.py:408-445).
+- K2 queue snapshot: the queue's parquet directory is replaced
+  through ``replace_parquet`` (the reference's ``np.save`` over the
+  same file each round, src/az_proc.py:408-445), so a snapshot of a
+  queue read from the snapshot path itself is safe.
 - K4 inventory export: JSON with geometry as WKT, plus the
   shapefile-compatible variant with 10-char truncated column names —
   the reference's ESRI shapefile sink truncates ``object_class`` ->
@@ -45,8 +47,52 @@ def write_csv_report(df: DataFrame, path: str) -> None:
     df.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
 
 
+class InterruptedSwapError(RuntimeError):
+    """A parquet table is missing but its moved-aside copy exists: a
+    ``replace_parquet`` swap stopped between its two renames."""
+
+
+def replace_parquet(df: DataFrame, path: str) -> None:
+    """Replace the parquet directory ``path`` with ``df``, even when
+    ``df`` reads ``path`` itself.
+
+    ``df`` is written once, to ``<path>.next``; then the Hadoop
+    FileSystem swaps it in: any stale ``<path>.prev`` is deleted,
+    ``<path>`` is renamed to ``<path>.prev``, ``<path>.next`` to
+    ``<path>``, and ``<path>.prev`` is deleted. A rename that fails
+    raises. A frame that read the old ``<path>`` must not be executed
+    again after the swap, since its files are gone.
+
+    If ``<path>`` is missing while ``<path>.prev`` exists, an earlier
+    swap stopped between its renames and ``<path>.prev`` is the only
+    copy of the table: raise ``InterruptedSwapError`` before anything
+    is written. Parquet has no transactions: on HDFS or a local disk
+    the swap is two metadata renames, while on an object store each
+    rename copies every file, and a table format's atomic commit
+    (Delta/Iceberg) replaces this helper."""
+    sc = df.sparkSession.sparkContext
+    target = sc._jvm.org.apache.hadoop.fs.Path(path.rstrip("/"))  # noqa: SLF001
+    fs = target.getFileSystem(sc._jsc.hadoopConfiguration())  # noqa: SLF001
+    prev = target.suffix(".prev")
+    nxt = target.suffix(".next")
+    if not fs.exists(target) and fs.exists(prev):
+        raise InterruptedSwapError(
+            f"{target} is missing but {prev} exists: a swap stopped "
+            f"between its renames; move {prev} back to {target} (or "
+            f"{nxt}, the complete new table, if it exists)"
+        )
+    df.write.mode("overwrite").parquet(nxt.toString())
+    fs.delete(prev, True)
+    if fs.exists(target) and not fs.rename(target, prev):
+        raise OSError(f"replace_parquet: rename {target} -> {prev} failed")
+    if not fs.rename(nxt, target):
+        raise OSError(f"replace_parquet: rename {nxt} -> {target} failed")
+    fs.delete(prev, True)
+
+
 def write_queue_snapshot(df: DataFrame, path: str) -> None:
-    df.write.mode("overwrite").parquet(path)
+    """K2: replace the queue snapshot at ``path`` (``replace_parquet``)."""
+    replace_parquet(df, path)
 
 
 def shapefile_compat_names(names: list[str]) -> list[str]:

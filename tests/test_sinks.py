@@ -69,6 +69,22 @@ def test_k2_queue_snapshot_overwrite(spark, sf_dir, tmp_path):
     assert n1 - n2 == 100
 
 
+def test_k2_queue_snapshot_in_place(spark, sf_dir, tmp_path):
+    # the reference's np.save over the same file each round: the new
+    # snapshot reads the path it replaces
+    from ast_data_pipeline_spark.plans.workqueue import allocate_round
+    from ast_data_pipeline_spark.sources.catalog import load
+
+    path = str(tmp_path / "queue")
+    load(spark, sf_dir, "orders").select("o_orderkey").orderBy("o_orderkey").limit(
+        1000
+    ).write.parquet(path)
+    alloc, rest = allocate_round(spark.read.parquet(path), 100, "o_orderkey")
+    write_queue_snapshot(rest, path)
+    assert spark.read.parquet(path).count() == 900
+    assert sorted(os.listdir(tmp_path)) == ["queue"]
+
+
 def test_k5_json_list(tmp_path):
     p = str(tmp_path / "list.json")
     write_json_list(["a", "b"], p)
