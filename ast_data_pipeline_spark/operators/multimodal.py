@@ -1,29 +1,30 @@
 """Multimodal columns: image/audio/video as opaque ``binary`` columns
 with typed metadata structs (north-star extension).
 
-The container has no image/audio codec libraries, so decode is REAL
-where the public spec + stdlib suffice: ``decode_image`` decodes
-uncompressed Netpbm (P6 PPM / P5 PGM) in pure numpy AND baseline PNG
-(CRC-checked chunk walk, zlib IDAT inflate, scanline unfilter per RFC
-2083; every depth-8 color type incl. palette/RGBA, plus depth-16
-grey/RGB with byte-granular filtering per spec §6.2)
-AND GIF87a/89a (block walk, sub-block reassembly, a full
-variable-width LZW codec with table resets, palette mapping,
-interlace — ``_gif_decode``) AND 24-bit BMP (bottom-up rows,
-BGR order, 4-byte padding — ``_bmp_decode``); ``decode_audio`` decodes
-uncompressed PCM WAV (RIFF chunk walk); ``extract_features``/
-``audio_features``/``pairwise_ssim`` compute over those decoded
-samples end-to-end. Compressed formats with REAL from-scratch codecs:
-baseline JPEG (``_jpeg_decode``/``encode_jpeg``), G.711 mu-law
-(``mulaw_expand``), IMA ADPCM (``adpcm_encode``/``adpcm_decode``).
-Only perceptual codecs that genuinely need a DSP library (mp3/h264)
-raise NotImplementedError at the plug point, and a deterministic fake
-(raw-byte features) keeps the Arrow plumbing — schema, batching,
-partitioning, UDF signature — exercised for those.
+The container has no image/audio codec libraries, so each medium has
+one REAL decode path written from its public spec in pure numpy:
 
-NONGOALS — codec-subset edges deliberately out of scope (VERDICT r9
-#7; each raises a clean ``NotImplementedError`` naming the gap, never
-a wrong answer). The reference itself produces none of these
+- images: ``decode_image`` reads baseline JPEG (``_jpeg_decode``; the
+  reference's own chip format, ``src/az_proc.py:524``, with
+  ``encode_jpeg`` as the matching encoder) and uncompressed Netpbm
+  (P6 PPM / P5 PGM);
+- audio: ``decode_audio`` reads uncompressed PCM WAV (RIFF chunk
+  walk, 8- or 16-bit, mono or interleaved channels);
+- video: ``decode_video`` reads uncompressed YUV4MPEG2 (C444 planes).
+
+``extract_features``/``audio_features``/``video_frame_features``/
+``pairwise_ssim`` compute over those decoded samples end-to-end inside
+Arrow-batched ``mapInPandas``. Any other container or format raises
+(``NotImplementedError`` from ``decode_image``, ``ValueError`` from
+``decode_audio``/``decode_video``) rather than decoding to a wrong
+answer. Payloads without an image signature (the synthetic text
+payloads of ``with_multimodal_columns``) get a deterministic fake in
+``extract_features`` — raw-byte features — which keeps the Arrow
+plumbing (schema, batching, partitioning, UDF signature) exercised.
+
+NONGOALS — codec edges deliberately out of scope (VERDICT r9 #7;
+each raises a clean error naming the gap, never a wrong answer). The
+reference itself produces none of these
 (``/root/reference/src/az_proc.py:524`` writes baseline cv2 JPEG
 chips):
 
@@ -42,14 +43,8 @@ arithmetic-coded JPEG  patent-era rarity; virtually no encoder emits it
 multi-scan baseline    interleaved multi-scan scheduling (non-progressive)
                        — same scheduler complexity as SOF2 without real-
                        world corpora emitting it. Guarded (r8 ADVICE).
-PNG depth 1/2/4        sub-byte packed samples; real-world training
-                       corpora are 8-bit (photos) with a depth-16 tail
-                       (medical/scientific) — the 16-bit path IS
-                       implemented; bit-unpacking for depths <8 adds
-                       surface without a user.
 mp3 / h264 / etc.      perceptual DSP codecs — genuinely require an
-                       external library; the plug point keeps the Arrow
-                       plumbing real via the deterministic fake.
+                       external library; no entry point here.
 =====================  =====================================================
 """
 
@@ -68,6 +63,13 @@ FEATURE_SCHEMA = (
 )
 
 SUPPORTED_FAKE = {"png", "jpg", "wav"}
+
+# Leading bytes that mark a payload as an image for extract_features:
+# JPEG SOI, binary Netpbm, and the PNG/GIF/BMP signatures, which
+# decode_image rejects by name.
+_IMAGE_SIGS = (
+    b"\xff\xd8", b"P6", b"P5", b"\x89PNG\r\n\x1a\n", b"GIF87a", b"GIF89a", b"BM",
+)
 
 
 def _parse_pnm_header(payload: bytes) -> tuple[bytes, int, int, int, int]:
@@ -95,474 +97,17 @@ def _parse_pnm_header(payload: bytes) -> tuple[bytes, int, int, int, int]:
     return magic, w, h, maxval, pos
 
 
-PNG_SIG = b"\x89PNG\r\n\x1a\n"
-
-
-def _png_unfilter(
-    raw: bytes, w: int, h: int, channels: int, sample_bytes: int = 1
-) -> np.ndarray:
-    """Undo PNG scanline filtering (spec §6: None/Sub/Up/Average/Paeth).
-
-    Sub and Up are vectorized (Sub is a mod-256 cumsum down the
-    per-channel byte columns); Average/Paeth carry a left-pixel
-    dependency and run as per-byte loops — acceptable because rows are
-    short and the hot path (our encoder) emits filter 0/1/2.
-
-    Filtering is defined on BYTES regardless of sample depth (spec
-    §6.2: "bpp is the number of bytes per complete pixel"), so the
-    16-bit path reuses this byte machinery with sample_bytes=2 and
-    reassembles big-endian sample pairs afterwards (in _png_decode).
-    """
-    bpp = channels * sample_bytes
-    stride = w * channels * sample_bytes
-    if len(raw) != h * (1 + stride):
-        raise ValueError("PNG raster size mismatch")
-    recon = np.zeros((h, stride), dtype=np.uint8)
-    for y in range(h):
-        off = y * (1 + stride)
-        ftype = raw[off]
-        cur = np.frombuffer(raw, np.uint8, count=stride, offset=off + 1)
-        prev = recon[y - 1] if y else np.zeros(stride, np.uint8)
-        if ftype == 0:
-            recon[y] = cur
-        elif ftype == 1:  # Sub: recon[x] = cur[x] + recon[x-bpp]
-            cols = cur.reshape(stride // bpp, bpp).astype(np.int64)
-            recon[y] = (np.cumsum(cols, axis=0) % 256).astype(np.uint8).ravel()
-        elif ftype == 2:  # Up
-            recon[y] = cur + prev  # uint8 wraps mod 256
-        elif ftype == 3:  # Average
-            row = recon[y]
-            for x in range(stride):
-                a = int(row[x - bpp]) if x >= bpp else 0
-                row[x] = (int(cur[x]) + (a + int(prev[x])) // 2) & 0xFF
-        elif ftype == 4:  # Paeth
-            row = recon[y]
-            for x in range(stride):
-                a = int(row[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (int(cur[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-    if sample_bytes == 2:
-        # big-endian 16-bit samples: (hi << 8) | lo
-        pairs = recon.reshape(h, w, channels, 2).astype(np.uint16)
-        arr16 = (pairs[..., 0] << 8) | pairs[..., 1]
-        return arr16[:, :, 0] if channels == 1 else arr16
-    arr = recon.reshape(h, w, channels)
-    return arr[:, :, 0] if channels == 1 else arr
-
-
-# Adam7 pass grid: (x0, y0, dx, dy) per pass, PNG spec §8.2
-_ADAM7_PASSES = (
-    (0, 0, 8, 8),
-    (4, 0, 8, 8),
-    (0, 4, 4, 8),
-    (2, 0, 4, 4),
-    (0, 2, 2, 4),
-    (1, 0, 2, 2),
-    (0, 1, 1, 2),
-)
-
-
-def _png_decode(payload: bytes) -> np.ndarray:
-    """Real PNG decode (public spec, RFC 2083): chunk walk with CRC
-    verification, zlib inflate of the IDAT stream, scanline unfilter.
-    Bit depth 8, every color type — grey (0), RGB (2), palette (3,
-    PLTE-mapped to RGB), grey+alpha (4), RGBA (6) — and both interlace
-    methods (0 = sequential, 1 = Adam7: each of the 7 passes is an
-    independently-filtered sub-image, unfiltered then scattered back
-    on its (x0, y0, dx, dy) grid)."""
-    import struct
-    import zlib
-
-    if payload[:8] != PNG_SIG:
-        raise ValueError("not a PNG payload")
-    pos, ihdr, idat, plte = 8, None, [], None
-    while pos + 12 <= len(payload):
-        (length,) = struct.unpack(">I", payload[pos : pos + 4])
-        ctype = payload[pos + 4 : pos + 8]
-        data = payload[pos + 8 : pos + 8 + length]
-        (crc,) = struct.unpack(
-            ">I", payload[pos + 8 + length : pos + 12 + length]
-        )
-        if zlib.crc32(ctype + data) & 0xFFFFFFFF != crc:
-            raise ValueError(f"PNG chunk {ctype!r} CRC mismatch")
-        if ctype == b"IHDR":
-            ihdr = data
-        elif ctype == b"PLTE":
-            plte = np.frombuffer(data, np.uint8).reshape(-1, 3)
-        elif ctype == b"IDAT":
-            idat.append(data)
-        elif ctype == b"IEND":
-            break
-        pos += 12 + length
-    if ihdr is None or not idat:
-        raise ValueError("PNG missing IHDR/IDAT")
-    w, h, depth, color, comp, filt, interlace = struct.unpack(">IIBBBBB", ihdr)
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color)
-    # depth 16 is legal for every non-palette color type (spec §11.2.2;
-    # palette indices are at most 8 bits)
-    depth_ok = depth == 8 or (depth == 16 and color != 3)
-    if not depth_ok or channels is None or comp or filt or interlace not in (0, 1):
-        raise NotImplementedError(
-            f"PNG subset: need depth 8 (any color type) or 16 (non-palette), "
-            f"color type 0/2/3/4/6, interlace 0/1 "
-            f"(got depth={depth} color={color} interlace={interlace})"
-        )
-    sample_bytes = depth // 8
-    dtype = np.uint16 if depth == 16 else np.uint8
-    raw = zlib.decompress(b"".join(idat))
-    if interlace:
-        out = np.zeros((h, w, channels), dtype)
-        off = 0
-        for x0, y0, dx, dy in _ADAM7_PASSES:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw == 0 or ph == 0:
-                continue  # empty pass contributes no bytes
-            size = ph * (1 + pw * channels * sample_bytes)
-            sub = _png_unfilter(
-                raw[off : off + size], pw, ph, channels, sample_bytes
-            )
-            off += size
-            out[y0::dy, x0::dx] = sub.reshape(ph, pw, channels)
-        if off != len(raw):
-            raise ValueError("PNG Adam7 data length mismatch")
-        arr = out[:, :, 0] if channels == 1 else out
-    else:
-        arr = _png_unfilter(raw, w, h, channels, sample_bytes)
-    if color == 3:
-        if plte is None:
-            raise ValueError("palette PNG missing PLTE")
-        if int(arr.max(initial=0)) >= len(plte):
-            raise ValueError("PNG palette index outside PLTE")
-        arr = plte[arr]
-    return arr
-
-
-def _png_filter_lines(img: np.ndarray, filter_type: int) -> list[bytes]:
-    """Filtered scanlines (1 type byte + data each) for one (sub)image
-    of shape (h, w, channels). Filtering is per-image, so Adam7 passes
-    filter independently, exactly as the spec requires. uint16 input
-    emits depth-16 scanlines: samples serialize big-endian and the
-    filters run on the BYTE stream with bpp = channels * 2 (spec
-    §6.2), mirroring the decode side."""
-    h, w, channels = img.shape
-    sample_bytes = 2 if img.dtype == np.uint16 else 1
-    if sample_bytes == 2:
-        rows = np.frombuffer(
-            np.ascontiguousarray(img).astype(">u2").tobytes(), np.uint8
-        ).reshape(h, w * channels * 2)
-    else:
-        rows = img.reshape(h, w * channels)
-    bpp = channels * sample_bytes
-    flat = rows.astype(np.int64)
-    lines = []
-    for y in range(h):
-        cur = flat[y]
-        if filter_type == 1:  # Sub (byte-granular, bpp bytes back)
-            cols = cur.reshape(-1, bpp)
-            out = cols.copy()
-            out[1:] = (cols[1:] - cols[:-1]) % 256
-            out = out.ravel()
-        elif filter_type == 2:  # Up
-            out = (cur - (flat[y - 1] if y else 0)) % 256
-        else:
-            out = cur
-        lines.append(bytes([filter_type]) + out.astype(np.uint8).tobytes())
-    return lines
-
-
-def encode_png(
-    arr: np.ndarray, filter_type: int = 0, interlace: bool = False
-) -> bytes:
-    """Minimal PNG encoder (fixture/ingest side of the roundtrip):
-    8-bit (uint8 input) or 16-bit (uint16 input, big-endian samples)
-    grey or RGB, one filter type for every scanline, zlib level 6,
-    optional Adam7 interlacing (the 7 passes emitted as independently
-    filtered sub-images). Filter types 1/2 are applied for real (so
-    tests can exercise the matching unfilter paths); 3/4 are not
-    emitted by this encoder."""
-    import struct
-    import zlib
-
-    if filter_type not in (0, 1, 2):
-        raise ValueError("encoder emits filter types 0/1/2 only")
-    arr = np.asarray(arr)
-    depth = 16 if arr.dtype == np.uint16 else 8
-    if depth == 8:
-        arr = arr.astype(np.uint8)
-    if arr.ndim == 2:
-        color, channels = 0, 1
-        arr = arr[:, :, None]
-    elif arr.ndim == 3 and arr.shape[2] == 3:
-        color, channels = 2, 3
-    else:
-        raise ValueError("need (h, w) grey or (h, w, 3) RGB")
-    h, w = arr.shape[:2]
-    lines: list[bytes] = []
-    if interlace:
-        for x0, y0, dx, dy in _ADAM7_PASSES:
-            sub = arr[y0::dy, x0::dx]
-            if sub.shape[0] == 0 or sub.shape[1] == 0:
-                continue
-            lines.extend(_png_filter_lines(sub, filter_type))
-    else:
-        lines = _png_filter_lines(arr, filter_type)
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, int(interlace))
-    idat = zlib.compress(b"".join(lines), 6)
-    return PNG_SIG + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat) + chunk(b"IEND", b"")
-
-
-GIF_SIGS = (b"GIF87a", b"GIF89a")
-
-
-def _lzw_compress(data: bytes, mcs: int) -> bytes:
-    """GIF-flavor LZW (variable 9..12-bit codes, LSB-first packing).
-
-    Emits the initial clear code, grows the code width when the next
-    free index passes the current width's capacity (GIF timing: the
-    encoder runs one table entry ahead of the decoder, so the encoder
-    boundary is ``(1 << width) + 1`` where the decoder's is
-    ``1 << width``), and resets the table with a clear code at the
-    4096-entry cap.
-    """
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    buf = nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal buf, nbits
-        buf |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(buf & 0xFF)
-            buf >>= 8
-            nbits -= 8
-
-    def fresh() -> tuple[dict[bytes, int], int, int]:
-        return {bytes([i]): i for i in range(clear)}, eoi + 1, mcs + 1
-
-    table, nxt, width = fresh()
-    emit(clear, width)
-    w = b""
-    for ch in data:
-        wk = w + bytes([ch])
-        if wk in table:
-            w = wk
-            continue
-        emit(table[w], width)
-        if nxt < 4096:
-            table[wk] = nxt
-            nxt += 1
-            if nxt == (1 << width) + 1 and width < 12:
-                width += 1
-        else:
-            emit(clear, width)
-            table, nxt, width = fresh()
-        w = bytes([ch])
-    if w:
-        emit(table[w], width)
-    emit(eoi, width)
-    if nbits:
-        out.append(buf & 0xFF)
-    return bytes(out)
-
-
-def _lzw_decompress(data: bytes, mcs: int) -> bytes:
-    """Inverse of ``_lzw_compress`` (GIF 89a spec appendix F): handles
-    clear codes mid-stream, the KwKwK just-assigned-code case, and
-    width growth at the decoder boundary ``len(table) == 1 << width``."""
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    out = bytearray()
-    buf = nbits = pos = 0
-    width = mcs + 1
-    table: list[bytes] | None = None
-    prev: int | None = None
-
-    def read_code() -> int | None:
-        nonlocal buf, nbits, pos
-        while nbits < width:
-            if pos >= len(data):
-                return None
-            buf |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = buf & ((1 << width) - 1)
-        buf >>= width
-        nbits -= width
-        return code
-
-    while True:
-        code = read_code()
-        if code is None:
-            raise ValueError("truncated LZW stream (no EOI code)")
-        if code == clear:
-            table = [bytes([i]) for i in range(clear)] + [b"", b""]
-            width = mcs + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if table is None:
-            raise ValueError("LZW data before the initial clear code")
-        if prev is None:
-            if code >= clear:
-                raise ValueError("first LZW code after clear must be a literal")
-            entry = table[code]
-        elif code < len(table):
-            entry = table[code]
-        elif code == len(table):  # KwKwK: code assigned by this very step
-            entry = table[prev] + table[prev][:1]
-        else:
-            raise ValueError(f"LZW code {code} out of table range {len(table)}")
-        out += entry
-        if prev is not None and len(table) < 4096:
-            table.append(table[prev] + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = code
-    return bytes(out)
-
-
-def _gif_decode(payload: bytes) -> np.ndarray:
-    """Real GIF decode (public GIF87a/89a spec): logical-screen walk,
-    global/local color table, sub-block reassembly, LZW decompression,
-    palette mapping, 4-pass interlace row reordering. Returns (h, w)
-    grey when the palette is pure grey, else (h, w, 3) RGB."""
-    import struct
-
-    if payload[:6] not in GIF_SIGS:
-        raise ValueError("not a GIF payload")
-    pos = 6
-    _w, _h, packed, _bg, _aspect = struct.unpack_from("<HHBBB", payload, pos)
-    pos += 7
-    gct = None
-    if packed & 0x80:
-        n = 2 << (packed & 0x07)
-        gct = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-        pos += 3 * n
-    while pos < len(payload):
-        introducer = payload[pos]
-        pos += 1
-        if introducer == 0x21:  # extension: label byte + sub-blocks
-            pos += 1
-            while payload[pos] != 0:
-                pos += 1 + payload[pos]
-            pos += 1
-        elif introducer == 0x2C:  # image descriptor
-            _l, _t, iw, ih, ipacked = struct.unpack_from("<HHHHB", payload, pos)
-            pos += 9
-            interlaced = bool(ipacked & 0x40)
-            table = gct
-            if ipacked & 0x80:
-                n = 2 << (ipacked & 0x07)
-                table = np.frombuffer(payload, np.uint8, 3 * n, pos).reshape(n, 3)
-                pos += 3 * n
-            if table is None:
-                raise ValueError("GIF image without a color table")
-            mcs = payload[pos]
-            pos += 1
-            chunks = []
-            while True:
-                blen = payload[pos]
-                pos += 1
-                if blen == 0:
-                    break
-                chunks.append(payload[pos : pos + blen])
-                pos += blen
-            idx = np.frombuffer(
-                _lzw_decompress(b"".join(chunks), mcs), np.uint8
-            )
-            if len(idx) != iw * ih:
-                raise ValueError("GIF raster size mismatch")
-            if int(idx.max(initial=0)) >= len(table):
-                raise ValueError("GIF pixel index outside the color table")
-            idx = idx.reshape(ih, iw)
-            if interlaced:
-                # Adam-style 4-pass row order (GIF spec appendix E):
-                # stored rows map to display rows 0,8,16.. / 4,12.. /
-                # 2,6.. / 1,3..
-                order = np.concatenate(
-                    [
-                        np.arange(start, ih, step)
-                        for start, step in ((0, 8), (4, 8), (2, 4), (1, 2))
-                    ]
-                )
-                deinter = np.empty_like(idx)
-                deinter[order] = idx
-                idx = deinter
-            rgb = table[idx]
-            if (table[:, 0] == table[:, 1]).all() and (
-                table[:, 1] == table[:, 2]
-            ).all():
-                return rgb[:, :, 0]
-            return rgb
-        elif introducer == 0x3B:  # trailer
-            break
-        else:
-            raise ValueError(f"unknown GIF block introducer 0x{introducer:02x}")
-    raise ValueError("GIF missing an image descriptor")
-
-
-def encode_gif(arr: np.ndarray) -> bytes:
-    """Minimal GIF87a encoder (fixture/ingest side of the roundtrip):
-    8-bit greyscale, 256-entry grey global color table, one image
-    block, real LZW compression with width growth and table resets."""
-    import struct
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim != 2:
-        raise ValueError("encoder writes 8-bit greyscale GIF only")
-    h, w = arr.shape
-    out = bytearray(b"GIF87a")
-    out += struct.pack("<HH", w, h)
-    # packed 0xF7: global color table, 8-bit color resolution, 256 entries
-    out += bytes([0xF7, 0, 0])
-    out += bytes(v for i in range(256) for v in (i, i, i))
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + b"\x00"
-    out += bytes([8])  # LZW minimum code size
-    comp = _lzw_compress(arr.tobytes(), 8)
-    for i in range(0, len(comp), 255):
-        blk = comp[i : i + 255]
-        out += bytes([len(blk)]) + blk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
 def decode_image(payload: bytes, fmt: str) -> np.ndarray:
     """Decode an image payload to a uint8 pixel array.
 
-    REAL for the uncompressed Netpbm formats — P6 PPM -> (h, w, 3) RGB,
-    P5 PGM -> (h, w) grayscale (pure numpy from the public Netpbm
-    spec) — for baseline PNG (8-bit grey/RGB, zlib IDAT inflate +
-    scanline unfilter, ``_png_decode``), for GIF87a/89a (LZW
-    decompression + palette mapping, ``_gif_decode``), for 24-bit BMP
-    (``_bmp_decode``), and for baseline JPEG (marker walk, stream
-    Huffman/quant tables, batched IDCT, chroma upsample, YCbCr->RGB —
-    ``_jpeg_decode``; the reference's own chip format, ref:
-    src/az_proc.py:524). Only progressive/arithmetic JPEG subsets
-    still raise NotImplementedError.
+    REAL for baseline JPEG (marker walk, stream Huffman/quant tables,
+    batched IDCT, chroma upsample, YCbCr->RGB — ``_jpeg_decode``; the
+    reference's own chip format, ref: src/az_proc.py:524) and for the
+    uncompressed Netpbm formats — P6 PPM -> (h, w, 3) RGB, P5 PGM ->
+    (h, w) grayscale (pure numpy from the public Netpbm spec). Any
+    other payload (PNG, GIF, BMP, ...) and the progressive/arithmetic
+    JPEG subsets raise NotImplementedError naming the format.
     """
-    if payload[:8] == PNG_SIG:
-        return _png_decode(payload)
-    if payload[:6] in GIF_SIGS:
-        return _gif_decode(payload)
-    if payload[:2] == b"BM":
-        return _bmp_decode(payload)
     if payload[:2] == b"\xff\xd8":
         return _jpeg_decode(payload)
     if payload[:2] in (b"P6", b"P5"):
@@ -577,8 +122,9 @@ def decode_image(payload: bytes, fmt: str) -> np.ndarray:
         arr = raster.reshape(h, w, channels)
         return arr if channels == 3 else arr[:, :, 0]
     raise NotImplementedError(
-        f"binary decode for format {fmt!r} requires an image codec "
-        "(Pillow/opencv), not present in this container"
+        f"no decoder for image format {fmt!r} (leading bytes "
+        f"{bytes(payload[:8])!r}): decode_image reads baseline JPEG and "
+        "binary Netpbm (P5/P6) only"
     )
 
 
@@ -608,12 +154,15 @@ def extract_features(df: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over the binary column.
 
     The features (mean value + 8-bin histogram) are computed over REAL
-    decoded pixels when the payload is an uncompressed Netpbm image
-    (P6/P5 — ``decode_image`` is a working pure-numpy decoder for
-    those), and over the raw payload bytes otherwise (the deterministic
-    fake standing in for absent png/jpg codecs). Either way the
-    Spark-side shape — Arrow binary batches in, fixed-schema feature
-    rows out — is exactly what a production decode/extract stage uses.
+    decoded pixels when the payload carries an image signature:
+    baseline JPEG and P6/P5 Netpbm decode through ``decode_image``,
+    and the PNG/GIF/BMP signatures reach it too, so a payload in a
+    format without a decoder raises instead of being featurized as
+    raw bytes. Payloads with no image signature (the synthetic text
+    payloads) take the deterministic fake: features over the raw
+    payload bytes. Either way the Spark-side shape — Arrow binary
+    batches in, fixed-schema feature rows out — is exactly what a
+    production decode/extract stage uses.
     """
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -628,19 +177,8 @@ def extract_features(df: DataFrame) -> DataFrame:
                 pdf["doc_id"], pdf["payload"], pdf["fmt"]
             ):
                 raw = np.frombuffer(payload, dtype=np.uint8)
-                head = bytes(payload[:8])
-                if (
-                    head == PNG_SIG
-                    or head[:6] in GIF_SIGS
-                    or head[:2] in (b"BM", b"P6", b"P5", b"\xff\xd8")
-                ):
+                if bytes(payload[:8]).startswith(_IMAGE_SIGS):
                     vals = decode_image(bytes(payload), fmt).ravel()
-                    if vals.dtype == np.uint16:
-                        # 16-bit samples: report features on the 8-bit
-                        # scale. 257 = 0x0101 is the PNG-spec sample
-                        # scaling (v16 = v8 * 257 maps 255 -> 65535),
-                        # so spec-scaled payloads invert EXACTLY.
-                        vals = vals.astype(np.float64) / 257.0
                     ok = True
                 else:
                     vals, ok = raw, fmt in SUPPORTED_FAKE
@@ -818,30 +356,21 @@ def pairwise_ssim(df: DataFrame) -> DataFrame:
     ).mapInPandas(_ssim, schema=SSIM_SCHEMA)
 
 
-def mulaw_expand(codes: np.ndarray) -> np.ndarray:
-    """G.711 mu-law byte -> linear PCM16, the ITU expansion formula
-    (sign/exponent/mantissa with bias 0x84) in vectorized numpy."""
-    u = (~codes.astype(np.int64)) & 0xFF
-    sign = (u & 0x80) != 0
-    exp = (u >> 4) & 0x07
-    mant = u & 0x0F
-    mag = (((mant << 3) + 0x84) << exp) - 0x84
-    return np.where(sign, -mag, mag).astype(np.int16)
-
-
 def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
-    """Decode a PCM or G.711 mu-law WAV payload to (samples, rate).
+    """Decode a PCM WAV payload to (samples, rate).
 
-    REAL, pure-numpy RIFF/WAVE parsing from the public specs: walks
-    the chunk list, reads the fmt chunk, and returns linear samples —
-    uint8 / int16 for PCM (format 1), and mu-law bytes (format 7)
-    expanded through the ITU G.711 formula to int16. Compressed audio
-    (mp3/aac) would still need a codec and has no entry point here.
+    REAL, pure-numpy RIFF/WAVE parsing from the public spec: walks the
+    chunk list, reads the fmt chunk, and returns uint8 / int16 samples
+    for PCM (format 1), reshaped to (frames, channels) when
+    interleaved. Any other container (AIFF, ...) or WAV format code
+    (mu-law 7, ADPCM 17, ...) raises ValueError naming it; compressed
+    audio (mp3/aac) would need a codec and has no entry point here.
     """
-    if payload[:4] == b"FORM" and payload[8:12] == b"AIFF":
-        return _aiff_decode(payload)
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE payload")
+        raise ValueError(
+            "not a RIFF/WAVE payload (container "
+            f"{bytes(payload[:4])!r}/{bytes(payload[8:12])!r})"
+        )
     pos, n = 12, len(payload)
     fmt_code = channels = rate = bits = None
     while pos + 8 <= n:
@@ -854,12 +383,8 @@ def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
             rate = int.from_bytes(body[4:8], "little")
             bits = int.from_bytes(body[14:16], "little")
         elif cid == b"data":
-            if fmt_code == 7:  # G.711 mu-law: 8-bit codes -> PCM16
-                if bits not in (None, 8):
-                    raise ValueError(f"mu-law must be 8-bit (got {bits})")
-                samples = mulaw_expand(np.frombuffer(body, dtype=np.uint8))
-            elif fmt_code != 1:
-                raise ValueError(f"not PCM/mu-law (fmt {fmt_code})")
+            if fmt_code != 1:
+                raise ValueError(f"not PCM (WAV format code {fmt_code})")
             elif bits == 8:
                 samples = np.frombuffer(body, dtype=np.uint8)
             elif bits == 16:
@@ -871,89 +396,6 @@ def decode_audio(payload: bytes) -> tuple[np.ndarray, int]:
             return samples, int(rate)
         pos += 8 + size + (size & 1)  # chunks are word-aligned
     raise ValueError("no data chunk")
-
-
-def _ext80_encode(x: int) -> bytes:
-    """Encode a positive integer as the 80-bit IEEE 754 extended
-    (SANE) big-endian float AIFF's COMM chunk stores the sample rate
-    in — sign+15-bit biased exponent, then a 64-bit mantissa with the
-    integer bit EXPLICIT (no hidden bit, unlike float32/64)."""
-    if x <= 0:
-        raise ValueError("ext80 encoder covers positive rates only")
-    e = x.bit_length() - 1          # x = m * 2^e with 1 <= m < 2
-    mant = x << (63 - e)            # explicit integer bit at bit 63
-    return (16383 + e).to_bytes(2, "big") + mant.to_bytes(8, "big")
-
-
-def _ext80_decode(b: bytes) -> int:
-    se = int.from_bytes(b[0:2], "big")
-    if se & 0x8000:
-        raise ValueError("negative AIFF sample rate")
-    e = se - 16383
-    mant = int.from_bytes(b[2:10], "big")
-    # rate = mant * 2^(e-63); integer rates shift exactly
-    shift = e - 63
-    return mant << shift if shift >= 0 else mant >> (-shift)
-
-
-def encode_aiff(samples: np.ndarray, rate: int = 8000) -> bytes:
-    """Minimal AIFF encoder (Apple's public '89 spec): mono PCM,
-    8-bit (SIGNED — AIFF's trap vs WAV's unsigned 8-bit) or 16-bit
-    big-endian, COMM with the 80-bit extended sample rate, SSND with
-    zero offset/block."""
-    samples = np.asarray(samples)
-    if samples.dtype == np.int8:
-        bits, raw = 8, samples.tobytes()
-    elif samples.dtype == np.int16:
-        bits, raw = 16, samples.astype(">i2").tobytes()
-    else:
-        raise ValueError("encode_aiff takes int8 or int16 samples")
-    comm = (
-        (1).to_bytes(2, "big")
-        + len(samples).to_bytes(4, "big")
-        + bits.to_bytes(2, "big")
-        + _ext80_encode(rate)
-    )
-    ssnd = (0).to_bytes(4, "big") + (0).to_bytes(4, "big") + raw
-    chunks = b""
-    for cid, body in ((b"COMM", comm), (b"SSND", ssnd)):
-        chunks += cid + len(body).to_bytes(4, "big") + body
-        if len(body) & 1:
-            chunks += b"\x00"      # chunks are word-aligned
-    return b"FORM" + (4 + len(chunks)).to_bytes(4, "big") + b"AIFF" + chunks
-
-
-def _aiff_decode(payload: bytes) -> tuple[np.ndarray, int]:
-    """Real AIFF parse: FORM/AIFF container walk, COMM (channels,
-    frames, bits, 80-bit extended rate), SSND offset handling,
-    big-endian signed PCM — including signed 8-bit, which WAV stores
-    unsigned."""
-    pos, n = 12, len(payload)
-    channels = bits = rate = None
-    data = None
-    while pos + 8 <= n:
-        cid = payload[pos : pos + 4]
-        size = int.from_bytes(payload[pos + 4 : pos + 8], "big")
-        body = payload[pos + 8 : pos + 8 + size]
-        if cid == b"COMM":
-            channels = int.from_bytes(body[0:2], "big")
-            bits = int.from_bytes(body[6:8], "big")
-            rate = _ext80_decode(body[8:18])
-        elif cid == b"SSND":
-            off = int.from_bytes(body[0:4], "big")
-            data = body[8 + off :]
-        pos += 8 + size + (size & 1)
-    if channels is None or data is None:
-        raise ValueError("AIFF missing COMM/SSND")
-    if bits == 8:
-        samples = np.frombuffer(data, dtype=np.int8)
-    elif bits == 16:
-        samples = np.frombuffer(data, dtype=">i2").astype(np.int16)
-    else:
-        raise ValueError(f"unsupported AIFF sample width {bits}")
-    if channels > 1:
-        samples = samples.reshape(-1, channels)
-    return samples, int(rate)
 
 
 AUDIO_SCHEMA = (
@@ -1068,66 +510,6 @@ def video_frame_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "payload").mapInPandas(_frames, schema=VIDEO_SCHEMA)
 
 
-def encode_bmp(arr: np.ndarray) -> bytes:
-    """Minimal 24-bit BI_RGB BMP encoder: bottom-up rows, BGR byte
-    order, rows padded to 4-byte boundaries — the three quirks that
-    make BMP a worthwhile decode test despite being uncompressed."""
-    import struct
-
-    arr = np.asarray(arr, dtype=np.uint8)
-    if arr.ndim == 2:
-        arr = np.stack([arr] * 3, axis=2)  # grey -> (v, v, v)
-    if arr.ndim != 3 or arr.shape[2] != 3:
-        raise ValueError("need (h, w) grey or (h, w, 3) RGB")
-    h, w = arr.shape[:2]
-    row_bytes = w * 3
-    pad = (4 - row_bytes % 4) % 4
-    body = bytearray()
-    for y in range(h - 1, -1, -1):  # bottom-up
-        row = arr[y, :, ::-1]  # RGB -> BGR
-        body += row.tobytes() + b"\x00" * pad
-    pixel_offset = 14 + 40
-    size = pixel_offset + len(body)
-    header = (
-        b"BM"
-        + struct.pack("<IHHI", size, 0, 0, pixel_offset)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    )
-    return bytes(header) + bytes(body)
-
-
-def _bmp_decode(payload: bytes) -> np.ndarray:
-    """Real BMP decode (public BITMAPINFOHEADER spec): 24-bit BI_RGB,
-    bottom-up (positive height) or top-down (negative), row padding,
-    BGR->RGB. Returns (h, w) grey when all channels agree."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    pixel_offset = struct.unpack_from("<I", payload, 10)[0]
-    hdr_size, w, h_raw = struct.unpack_from("<Iii", payload, 14)
-    planes, bpp, compression = struct.unpack_from("<HHI", payload, 26)
-    if hdr_size < 40 or bpp != 24 or compression != 0:
-        raise NotImplementedError(
-            f"BMP subset: 24-bit BI_RGB only (bpp={bpp}, compression={compression})"
-        )
-    h = abs(h_raw)
-    top_down = h_raw < 0
-    row_bytes = w * 3
-    stride = row_bytes + (4 - row_bytes % 4) % 4
-    if len(payload) < pixel_offset + stride * h:
-        raise ValueError("truncated BMP raster")
-    rows = []
-    for i in range(h):
-        off = pixel_offset + i * stride
-        row = np.frombuffer(payload, np.uint8, row_bytes, off).reshape(w, 3)
-        rows.append(row[:, ::-1])  # BGR -> RGB
-    arr = np.stack(rows if top_down else rows[::-1], axis=0)
-    if (arr[:, :, 0] == arr[:, :, 1]).all() and (arr[:, :, 1] == arr[:, :, 2]).all():
-        return arr[:, :, 0]
-    return arr
-
-
 # --- JPEG baseline codec (ITU-T T.81, public spec; pure numpy) -------
 #
 # Closes the last codec stub (VERDICT r7 #3): the reference's chips
@@ -1139,7 +521,7 @@ def _bmp_decode(payload: bytes) -> np.ndarray:
 # components and 4:4:4 / 4:2:2 / 4:2:0 sampling factors, DRI/RSTn
 # restart handling, byte-unstuffing, per-component batched IDCT,
 # JFIF YCbCr->RGB. Progressive (SOF2) and arithmetic coding raise
-# NotImplementedError — honest subset guards like the PNG/GIF ones.
+# NotImplementedError — honest subset guards, never a wrong answer.
 #
 # The encoder writes valid baseline JFIF (grayscale, or RGB with
 # optional 4:2:0) using all-ones quantization tables. With quant=1,
@@ -1484,8 +866,7 @@ def _jpeg_decode(payload: bytes) -> np.ndarray:
     DQT/DHT tables, SOF0 (1 or 3 components, sampling factors up to
     2x2), DRI/RSTn restarts, Huffman + magnitude decode, dequantize,
     batched IDCT, chroma upsample, JFIF YCbCr->RGB. Progressive /
-    arithmetic / 12-bit raise NotImplementedError (subset guards in
-    the PNG/GIF style)."""
+    arithmetic / 12-bit raise NotImplementedError (subset guards)."""
     import struct
 
     if payload[:2] != JPEG_SOI:
@@ -1636,66 +1017,3 @@ def _jpeg_decode(payload: bytes) -> np.ndarray:
     b = y + 1.772 * (cb - 128.0)
     rgb = np.stack([r, g, b], axis=2)
     return np.clip(np.rint(rgb), 0, 255).astype(np.uint8)
-
-
-# --- IMA ADPCM (DVI4) codec — public IMA spec; pure integer ----------
-
-IMA_INDEX_TABLE = (-1, -1, -1, -1, 2, 4, 6, 8, -1, -1, -1, -1, 2, 4, 6, 8)
-IMA_STEP_TABLE = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
-    41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130, 143, 157, 173,
-    190, 209, 230, 253, 279, 307, 337, 371, 408, 449, 494, 544, 598, 658,
-    724, 796, 876, 963, 1060, 1166, 1282, 1411, 1552, 1707, 1878, 2066,
-    2272, 2499, 2749, 3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894,
-    6484, 7132, 7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289,
-    16818, 18500, 20350, 22385, 24623, 27086, 29794, 32767,
-)
-
-
-def adpcm_encode(samples) -> list[int]:
-    """IMA ADPCM encode: int16 samples -> 4-bit nibbles (one per
-    sample; initial predictor 0, index 0). The PREDICTIVE compressed
-    codec next to mu-law's memoryless companding — 4:1 vs PCM16."""
-    pred, idx = 0, 0
-    out = []
-    for s in samples:
-        s = int(s)
-        step = IMA_STEP_TABLE[idx]
-        diff = s - pred
-        n = 0
-        if diff < 0:
-            n = 8
-            diff = -diff
-        if diff >= step:
-            n |= 4
-            diff -= step
-        if diff >= step >> 1:
-            n |= 2
-            diff -= step >> 1
-        if diff >= step >> 2:
-            n |= 1
-        delta = (step >> 3) + (step if n & 4 else 0) \
-            + ((step >> 1) if n & 2 else 0) + ((step >> 2) if n & 1 else 0)
-        pred = pred - delta if n & 8 else pred + delta
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + IMA_INDEX_TABLE[n]))
-        out.append(n)
-    return out
-
-
-def adpcm_decode(nibbles) -> list[int]:
-    """IMA ADPCM decode: nibbles -> int16 samples (the encoder's own
-    predictor trace — encoder and decoder share the reconstruction,
-    which is what makes the scheme drift-free)."""
-    pred, idx = 0, 0
-    out = []
-    for n in nibbles:
-        n = int(n)
-        step = IMA_STEP_TABLE[idx]
-        delta = (step >> 3) + (step if n & 4 else 0) \
-            + ((step >> 1) if n & 2 else 0) + ((step >> 2) if n & 1 else 0)
-        pred = pred - delta if n & 8 else pred + delta
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + IMA_INDEX_TABLE[n]))
-        out.append(pred)
-    return out

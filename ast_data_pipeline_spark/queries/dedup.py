@@ -1944,10 +1944,10 @@ def _dhash_sql_expr() -> str:
 @register(
     "x_image_dhash_dedup",
     # Perceptual-hash image dedup (dHash — the public aHash/dHash/
-    # pHash family): every doc's 96 payload bytes become a REAL 8x12
-    # GIF, the pure-numpy decoder recovers the pixels, and the
-    # gradient hash (does pixel x exceed pixel x+1 on a sampled grid)
-    # gives a 56-bit signature robust to brightness shifts. Pairing is
+    # pHash family): every doc's 96 payload bytes are an 8x12 grey
+    # raster hashed inside mapInPandas. The gradient hash (does pixel
+    # x exceed pixel x+1 on a sampled grid) gives a 56-bit signature
+    # robust to brightness shifts. Pairing is
     # NEVER all-pairs: a candidate must share a COMPOSITE 16-bit band
     # — one of the C(7,2) = 21 byte PAIRS of the signature.
     # Pigeonhole: 5 bit flips corrupt at most 5 of the 7 bytes,
@@ -1961,7 +1961,7 @@ def _dhash_sql_expr() -> str:
     # >= 2-shared-bands HAVING after a single-band join still
     # materialized the quadratic candidate set and was SLOWER.) The
     # oracle computes the same hash arithmetically from code points
-    # (decode is lossless), the same composite banding, and
+    # (the raster IS the code points), the same composite banding, and
     # bit_count(xor) — hamming is integer-exact.
     oracle=f"""
 WITH img AS (
@@ -1986,9 +1986,9 @@ SELECT doc_a, doc_b, bit_count(xor(ha, hb))::BIGINT AS hamming
 FROM cand
 WHERE bit_count(xor(ha, hb)) <= {DHASH_T}
 """.replace("{dhash}", _dhash_sql_expr()),
-    doc="Perceptual image dedup via dHash: real GIF encode+decode per "
-    "doc (the multimodal codec path), 56-bit gradient signature, "
-    "occupancy-safe candidacy — pairs must share >= 2 of the 7 "
+    doc="Perceptual image dedup via dHash: each doc's 96 ASCII bytes "
+    "as an 8x12 grey raster hashed in mapInPandas, 56-bit gradient "
+    "signature, occupancy-safe candidacy — pairs must share >= 2 of the 7 "
     "signature bytes via composite 16-bit byte-pair band keys "
     "(pigeonhole-exact for hamming <= 5), which collapsed the "
     "background-collision candidate space the sf1 measurement showed "
@@ -2009,19 +2009,13 @@ def x_image_dhash_dedup(spark, sf_dir):
     def _hash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from ast_data_pipeline_spark.operators.multimodal import (
-            _gif_decode,
-            encode_gif,
-        )
-
         cols = np.array(DHASH_COLS)
         for pdf in batches:
             if not len(pdf):
                 continue
             out = {"doc_id": [], "h": []}
             for doc_id, raster in zip(pdf["doc_id"], pdf["raster"]):
-                arr = np.frombuffer(bytes(raster), np.uint8).reshape(8, 12)
-                pix = _gif_decode(encode_gif(arr))
+                pix = np.frombuffer(bytes(raster), np.uint8).reshape(8, 12)
                 g = pix[:, cols].astype(np.int32)
                 bits = (g[:, :-1] > g[:, 1:]).ravel()
                 h = 0

@@ -519,15 +519,16 @@ def s15_corrupt_record_quarantine(spark, sf_dir):
 
 @register(
     "s16_binaryfile_ingest",
-    # Binary-file directory source: real GIF files on disk (written by
-    # the repo's own LZW encoder, one per document) ingested with
-    # spark.read.format("binaryFile") — the (path, length, content)
-    # source a multimodal pipeline starts from — then doc ids parsed
-    # from file NAMES and pixels decoded from file BYTES inside
-    # mapInPandas. The oracle is the identity expectation off the
-    # documents table: the decoded-pixel mean must equal each doc's
-    # mean ASCII code point (the GIF roundtrip is lossless), proving
-    # name parsing, content transport, and decode end-to-end.
+    # Binary-file directory source: real P5 PGM files on disk (one
+    # per document, the 12x8 raster behind a Netpbm header) ingested
+    # with spark.read.format("binaryFile") — the (path, length,
+    # content) source a multimodal pipeline starts from — then doc ids
+    # parsed from file NAMES and pixels decoded from file BYTES by
+    # operators/multimodal.decode_image inside mapInPandas. The oracle
+    # is the identity expectation off the documents table: the
+    # decoded-pixel mean must equal each doc's mean ASCII code point
+    # (PGM is uncompressed), proving name parsing, content transport,
+    # and decode end-to-end.
     oracle="""
 SELECT doc_id, 12 AS height, 8 AS width,
        (list_sum(list_transform(generate_series(1, 96),
@@ -538,7 +539,7 @@ FROM (SELECT doc_id,
              substr(rpad(regexp_replace(text, '[^ -~]', '?', 'g'), 96, 'x'), 1, 96) AS t
       FROM documents)
 """,
-    doc="S16 binary-file directory source: per-doc GIF files written "
+    doc="S16 binary-file directory source: per-doc PGM files written "
     "by executors (foreachPartition; on a cluster the target is "
     "shared storage), re-ingested via the binaryFile format source, "
     "doc ids regexp-parsed from paths, payloads decoded in Arrow "
@@ -565,23 +566,18 @@ def s16_binaryfile_ingest(spark, sf_dir):
     src = docs.select("doc_id", F.encode(t96, "utf-8").alias("raster"))
 
     def write_part(rows) -> None:
-        import numpy as np
-
-        from ast_data_pipeline_spark.operators.multimodal import encode_gif
-
         for r in rows:
-            arr = np.frombuffer(bytes(r.raster), np.uint8).reshape(12, 8)
-            with open(os.path.join(tmp, f"doc_{r.doc_id}.gif"), "wb") as f:
-                f.write(encode_gif(arr))
+            with open(os.path.join(tmp, f"doc_{r.doc_id}.pgm"), "wb") as f:
+                f.write(b"P5\n8 12\n255\n" + bytes(r.raster))
 
     src.foreachPartition(write_part)
     back = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", "*.gif")
+        .option("pathGlobFilter", "*.pgm")
         .load(tmp)
     )
     parsed = back.select(
-        F.regexp_extract(F.col("path"), r"doc_(\d+)\.gif$", 1)
+        F.regexp_extract(F.col("path"), r"doc_(\d+)\.pgm$", 1)
         .cast("long")
         .alias("doc_id"),
         "content",
@@ -590,7 +586,7 @@ def s16_binaryfile_ingest(spark, sf_dir):
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from ast_data_pipeline_spark.operators.multimodal import _gif_decode
+        from ast_data_pipeline_spark.operators.multimodal import decode_image
 
         for pdf in batches:
             if not len(pdf):
@@ -598,7 +594,7 @@ def s16_binaryfile_ingest(spark, sf_dir):
             out = {"doc_id": [], "height": [], "width": [], "mean_byte": [],
                    "is_valid": []}
             for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                arr = _gif_decode(bytes(content))
+                arr = decode_image(bytes(content), "pgm")
                 out["doc_id"].append(int(doc_id))
                 out["height"].append(int(arr.shape[0]))
                 out["width"].append(int(arr.shape[1]))

@@ -1,7 +1,7 @@
-"""Property-based fuzzing of the pure-Python codecs: any payload the
-encoders produce must decode back bit-exactly (LZW / GIF / BMP / PNG),
-for arbitrary shapes and byte contents — the roundtrip law the oracle
-gates exercise only at the fixture shapes."""
+"""Property-based fuzzing of the baseline JPEG codec: exact roundtrips
+on constant 8x8 blocks, bounded error on arbitrary content, for
+arbitrary shapes and byte contents — the laws the oracle gate
+exercises only at the fixture shape — plus its subset guards."""
 
 from __future__ import annotations
 
@@ -9,62 +9,11 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from ast_data_pipeline_spark.operators.multimodal import (
-    _bmp_decode,
-    _gif_decode,
-    _lzw_compress,
-    _lzw_decompress,
-    _png_decode,
-    encode_bmp,
-    encode_gif,
-    encode_png,
-)
-
-
-@given(data=st.binary(min_size=0, max_size=4000))
-@settings(max_examples=60, deadline=None)
-def test_lzw_roundtrip_arbitrary_bytes(data):
-    assert _lzw_decompress(_lzw_compress(data, 8), 8) == data
-
-
-@given(
-    data=st.lists(st.integers(0, 15), min_size=1, max_size=3000),
-    mcs=st.sampled_from([4, 5, 8]),
-)
-@settings(max_examples=40, deadline=None)
-def test_lzw_roundtrip_small_alphabets(data, mcs):
-    raw = bytes(d % (1 << mcs) for d in data)
-    assert _lzw_decompress(_lzw_compress(raw, mcs), mcs) == raw
-
+from ast_data_pipeline_spark.operators.multimodal import _jpeg_decode, encode_jpeg
 
 _grey = st.tuples(
     st.integers(1, 24), st.integers(1, 24), st.integers(0, 2**32 - 1)
 )
-
-
-@given(_grey)
-@settings(max_examples=40, deadline=None)
-def test_gif_bmp_png_roundtrip_random_grey(shape):
-    h, w, seed = shape
-    arr = np.random.RandomState(seed).randint(0, 256, (h, w)).astype(np.uint8)
-    assert (_gif_decode(encode_gif(arr)) == arr).all()
-    assert (_bmp_decode(encode_bmp(arr)) == arr).all()
-    for ft in (0, 1, 2):
-        assert (_png_decode(encode_png(arr, filter_type=ft)) == arr).all()
-
-
-@given(_grey)
-@settings(max_examples=20, deadline=None)
-def test_bmp_png_roundtrip_random_rgb(shape):
-    h, w, seed = shape
-    arr = np.random.RandomState(seed).randint(0, 256, (h, w, 3)).astype(np.uint8)
-    assert (_bmp_decode(encode_bmp(arr)) == arr).all()
-    assert (_png_decode(encode_png(arr, filter_type=1)) == arr).all()
-
-
-# --- JPEG (baseline DCT; lossy in general, exact on constant blocks) --
-
-from ast_data_pipeline_spark.operators.multimodal import _jpeg_decode, encode_jpeg
 
 
 @given(
@@ -153,28 +102,6 @@ def test_jpeg_subset_guards():
         _jpeg_decode(b"\x00\x01not a jpeg")
 
 
-@given(
-    st.integers(min_value=1, max_value=19),
-    st.integers(min_value=1, max_value=19),
-    st.integers(min_value=0, max_value=2),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_adam7_roundtrip_exact(h, w, ft, seed):
-    """Adam7 interlace is lossless for every image size — including
-    sizes where late passes are empty (w or h < pass offset)."""
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _png_decode,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(seed)
-    grey = rng.integers(0, 256, (h, w), np.uint8).astype(np.uint8)
-    assert (_png_decode(encode_png(grey, ft, interlace=True)) == grey).all()
-    rgb = rng.integers(0, 256, (h, w, 3), np.uint8).astype(np.uint8)
-    assert (_png_decode(encode_png(rgb, ft, interlace=True)) == rgb).all()
-
-
 def test_jpeg_truncated_entropy_raises_valueerror():
     """A JPEG cut INSIDE the entropy-coded segment must surface as the
     ValueError contract the other codecs follow, not a raw IndexError
@@ -219,170 +146,3 @@ def test_jpeg_multi_scan_guard():
     mutated = bytes(payload[:idx]) + new_seg + bytes(payload[idx + 2 + seglen :])
     with pytest.raises(NotImplementedError, match="multi-scan"):
         _jpeg_decode(mutated)
-
-
-# --- PNG color types 3/4/6 and interlaced GIF (r8 subset closures) ----
-
-import struct
-import zlib
-
-
-def _png_chunks(ihdr: bytes, extra: list, raster: bytes) -> bytes:
-    out = bytearray(b"\x89PNG\r\n\x1a\n")
-    for ctype, data in [(b"IHDR", ihdr)] + extra + [
-        (b"IDAT", zlib.compress(raster)),
-        (b"IEND", b""),
-    ]:
-        out += struct.pack(">I", len(data)) + ctype + data
-        out += struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-    return bytes(out)
-
-
-@given(st.integers(0, 2**32 - 1))
-@settings(max_examples=15, deadline=None)
-def test_png_rgba_grayalpha_palette_decode(seed):
-    rng = np.random.RandomState(seed)
-    h, w = int(rng.randint(1, 9)), int(rng.randint(1, 9))
-    # RGBA (color type 6)
-    rgba = rng.randint(0, 256, (h, w, 4)).astype(np.uint8)
-    raster = b"".join(b"\x00" + rgba[y].tobytes() for y in range(h))
-    p = _png_chunks(struct.pack(">IIBBBBB", w, h, 8, 6, 0, 0, 0), [], raster)
-    assert (_png_decode(p) == rgba).all()
-    # grey+alpha (color type 4)
-    ga = rng.randint(0, 256, (h, w, 2)).astype(np.uint8)
-    raster = b"".join(b"\x00" + ga[y].tobytes() for y in range(h))
-    p = _png_chunks(struct.pack(">IIBBBBB", w, h, 8, 4, 0, 0, 0), [], raster)
-    assert (_png_decode(p) == ga).all()
-    # palette (color type 3): indexes map through PLTE to RGB
-    n_pal = int(rng.randint(2, 17))
-    plte = rng.randint(0, 256, (n_pal, 3)).astype(np.uint8)
-    idx = rng.randint(0, n_pal, (h, w)).astype(np.uint8)
-    raster = b"".join(b"\x00" + idx[y].tobytes() for y in range(h))
-    p = _png_chunks(
-        struct.pack(">IIBBBBB", w, h, 8, 3, 0, 0, 0),
-        [(b"PLTE", plte.tobytes())],
-        raster,
-    )
-    assert (_png_decode(p) == plte[idx]).all()
-
-
-@given(st.integers(0, 2**32 - 1))
-@settings(max_examples=15, deadline=None)
-def test_gif_interlaced_decode(seed):
-    from ast_data_pipeline_spark.operators.multimodal import _lzw_compress
-
-    rng = np.random.RandomState(seed)
-    h, w = int(rng.randint(1, 24)), int(rng.randint(1, 12))
-    arr = rng.randint(0, 256, (h, w)).astype(np.uint8)
-    # store rows in the 4-pass interlace order, set the interlace flag
-    order = np.concatenate(
-        [np.arange(s, h, p) for s, p in ((0, 8), (4, 8), (2, 4), (1, 2))]
-    )
-    stored = arr[order]
-    out = bytearray(b"GIF87a")
-    out += struct.pack("<HH", w, h)
-    out += bytes([0xF7, 0, 0])
-    out += bytes(v for i in range(256) for v in (i, i, i))
-    out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h) + bytes([0x40])  # interlaced
-    out += bytes([8])
-    comp = _lzw_compress(stored.tobytes(), 8)
-    for i in range(0, len(comp), 255):
-        out += bytes([len(comp[i : i + 255])]) + comp[i : i + 255]
-    out += b"\x00\x3b"
-    assert (_gif_decode(bytes(out)) == arr).all()
-
-
-from ast_data_pipeline_spark.operators.multimodal import (
-    IMA_STEP_TABLE,
-    adpcm_decode,
-    adpcm_encode,
-)
-
-
-@given(st.lists(st.integers(-32768, 32767), min_size=1, max_size=300))
-@settings(max_examples=40, deadline=None)
-def test_adpcm_tracks_any_signal_within_step_bound(samples):
-    # ADPCM's quantizer covers residuals up to 7/4 of the current step;
-    # WITHIN that range the reconstruction error is bounded by the
-    # quantization granularity (step/4 residual + step/8 bias + floor
-    # slop). Out-of-range samples are slew overload — error there is
-    # unbounded by design (the step adapts over subsequent samples),
-    # so the property only binds in-range, unclamped samples.
-    enc = adpcm_encode(samples)
-    dec = adpcm_decode(enc)
-    pred, idx = 0, 0
-    for s, d, n in zip(samples, dec, enc):
-        step = IMA_STEP_TABLE[idx]
-        in_range = abs(int(s) - pred) <= step + (step >> 1) + (step >> 2)
-        if in_range and -32768 < d < 32767:
-            assert abs(int(s) - int(d)) <= (step >> 2) + (step >> 3) + 3, (
-                s, d, pred, step,
-            )
-        pred = int(d)
-        idx = max(0, min(88, idx + (-1, -1, -1, -1, 2, 4, 6, 8,
-                                    -1, -1, -1, -1, 2, 4, 6, 8)[n]))
-
-
-def test_adpcm_decoder_is_encoder_trace():
-    import numpy as np
-
-    sig = ((np.arange(200) * 37) % 4001 - 2000).astype(int)
-    nib = adpcm_encode(sig)
-    dec = adpcm_decode(nib)
-    # re-encoding the DECODED signal with the same start state yields
-    # nibbles decoding to the same trace (drift-free property)
-    dec2 = adpcm_decode(adpcm_encode(dec))
-    assert np.abs(np.array(dec2) - np.array(dec)).max() <= max(IMA_STEP_TABLE)
-    assert len(nib) == len(sig) and all(0 <= n < 16 for n in nib)
-
-
-@given(
-    st.integers(min_value=1, max_value=19),
-    st.integers(min_value=1, max_value=19),
-    st.integers(min_value=0, max_value=2),
-    st.booleans(),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_png_depth16_roundtrip_exact(h, w, ft, interlace, seed):
-    """Depth-16 PNG (VERDICT r9 #7): big-endian sample pairs survive
-    encode->decode bit-exactly for every size/filter/interlace combo,
-    grey and RGB — the byte-granular filter machinery (bpp = channels
-    * 2 per spec §6.2) must not mix sample halves."""
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _png_decode,
-        encode_png,
-    )
-
-    rng = np.random.default_rng(seed)
-    grey = rng.integers(0, 65536, (h, w), np.uint16).astype(np.uint16)
-    out = _png_decode(encode_png(grey, ft, interlace=interlace))
-    assert out.dtype == np.uint16 and (out == grey).all()
-    rgb = rng.integers(0, 65536, (h, w, 3), np.uint16).astype(np.uint16)
-    out = _png_decode(encode_png(rgb, ft, interlace=interlace))
-    assert out.dtype == np.uint16 and (out == rgb).all()
-
-
-@given(
-    st.integers(min_value=1, max_value=300),
-    st.sampled_from([8, 16]),
-    st.sampled_from([8000, 11025, 44100, 48000]),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=40, deadline=None)
-def test_aiff_roundtrip_exact(n, bits, rate, seed):
-    """AIFF encode->decode is bit-exact for both sample widths, every
-    length parity (odd 8-bit bodies exercise the chunk pad byte), and
-    the 80-bit extended sample rate survives exactly."""
-    from ast_data_pipeline_spark.operators.multimodal import (
-        decode_audio,
-        encode_aiff,
-    )
-
-    rng = np.random.default_rng(seed)
-    if bits == 8:
-        s = rng.integers(-128, 128, n).astype(np.int8)
-    else:
-        s = rng.integers(-32768, 32768, n).astype(np.int16)
-    out, r = decode_audio(encode_aiff(s, rate))
-    assert r == rate and out.dtype == s.dtype and (out == s).all()

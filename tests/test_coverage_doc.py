@@ -1,12 +1,13 @@
 """COVERAGE.md <-> registry lockstep (VERDICT r9 #5).
 
 The r9 query removals had to be cleaned from SHUFFLE/PROFILE by hand;
-nothing guarded COVERAGE.md. Two directions, both enforced:
+nothing guarded them. Two directions, both enforced:
 
 1. every registered query name appears in COVERAGE.md (no
    undocumented operator);
-2. every query-shaped token in COVERAGE.md resolves in the registry
-   (no ghost rows naming removed/renamed queries).
+2. every query-shaped token in COVERAGE.md, SHUFFLE.md and PROFILE.md
+   resolves in the registry (no ghost rows naming removed/renamed
+   queries).
 
 Query-shaped = matches the registry's family-prefix grammar
 (q18_*, s_stream_*, x_*, a_*, ... — see ``_QUERY_TOKEN``). Plain
@@ -22,6 +23,9 @@ from ast_data_pipeline_spark.registry import load_all
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 DOC = REPO / "COVERAGE.md"
+# Generated per-query tables (tools/shuffle_audit.py, PROFILE.md) that
+# must drop a query's rows when it is retired.
+GHOST_CHECKED_DOCS = (DOC, REPO / "SHUFFLE.md", REPO / "PROFILE.md")
 
 _QUERY_TOKEN = re.compile(
     r"^(?:q\d+|s\d+|k\d+|p\d+|f\d+|o\d+|u\d+|a\d*|j\d*|w|x|e|t|d|s_stream|flagship)"
@@ -34,8 +38,8 @@ _QUERY_TOKEN = re.compile(
 _ALLOW: set[str] = set()
 
 
-def _doc_tokens() -> set[str]:
-    text = DOC.read_text(encoding="utf-8")
+def _doc_tokens(doc: pathlib.Path = DOC) -> set[str]:
+    text = doc.read_text(encoding="utf-8")
     return set(re.findall(r"[a-z][a-z0-9_]*", text))
 
 
@@ -50,11 +54,12 @@ def test_every_registered_query_documented():
 
 def test_no_ghost_query_names_in_doc():
     registered = set(load_all())
-    ghosts = sorted(
-        t for t in _doc_tokens()
-        if _QUERY_TOKEN.match(t) and t not in registered and t not in _ALLOW
-    )
-    assert not ghosts, f"COVERAGE.md names unregistered queries: {ghosts[:30]}"
+    for doc in GHOST_CHECKED_DOCS:
+        ghosts = sorted(
+            t for t in _doc_tokens(doc)
+            if _QUERY_TOKEN.match(t) and t not in registered and t not in _ALLOW
+        )
+        assert not ghosts, f"{doc.name} names unregistered queries: {ghosts[:30]}"
 
 
 def test_priority_covers_registry():

@@ -17,10 +17,6 @@ from ast_data_pipeline_spark.registry import load_all
 
 
 def _brute_pairs(spark, sf_dir):
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        encode_gif,
-    )
     from ast_data_pipeline_spark.queries.dedup import DHASH_COLS, DHASH_T
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -32,8 +28,7 @@ def _brute_pairs(spark, sf_dir):
     for r in rows:
         t = "".join(ch if " " <= ch <= "~" else "?" for ch in r.text)
         t = (t + "x" * 96)[:96]
-        arr = np.frombuffer(t.encode(), np.uint8).reshape(8, 12)
-        pix = _gif_decode(encode_gif(arr))
+        pix = np.frombuffer(t.encode(), np.uint8).reshape(8, 12)
         g = pix[:, cols].astype(np.int32)
         bits = (g[:, :-1] > g[:, 1:]).ravel()
         h = 0

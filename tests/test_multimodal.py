@@ -16,6 +16,37 @@ from ast_data_pipeline_spark.sources.catalog import load
 def test_decode_stub_raises():
     with pytest.raises(NotImplementedError):
         decode_image(b"\x89PNG", "png")
+    # image formats without a decoder (a full PNG signature, a GIF89a
+    # header, a BMP header) are named in the error, never decoded
+    for payload, fmt, magic in (
+        (b"\x89PNG\r\n\x1a\n" + bytes(25), "png", "PNG"),
+        (b"GIF89a" + bytes(7), "gif", "GIF89a"),
+        (b"BM" + bytes(52), "bmp", "BM"),
+    ):
+        with pytest.raises(NotImplementedError, match=f"{fmt}.*{magic}"):
+            decode_image(payload, fmt)
+    # a truncated JPEG is a ValueError from the real decoder
+    with pytest.raises(ValueError):
+        decode_image(b"\xff\xd8\xff\xe0 jpeg", "jpg")
+
+    from ast_data_pipeline_spark.operators.multimodal import decode_audio
+
+    # audio other than PCM WAV: an AIFF container, a format-7 (mu-law) WAV
+    comm = (1).to_bytes(2, "big") + (4).to_bytes(4, "big") + (8).to_bytes(2, "big")
+    aiff = b"FORM" + (30).to_bytes(4, "big") + b"AIFF" + b"COMM"
+    aiff += (18).to_bytes(4, "big") + comm + bytes(10)
+    with pytest.raises(ValueError, match="AIFF"):
+        decode_audio(aiff)
+    mulaw = (
+        b"RIFF" + (40).to_bytes(4, "little") + b"WAVEfmt "
+        + (16).to_bytes(4, "little")
+        + (7).to_bytes(2, "little") + (1).to_bytes(2, "little")
+        + (8000).to_bytes(4, "little") + (8000).to_bytes(4, "little")
+        + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
+        + b"data" + (4).to_bytes(4, "little") + bytes([0x00, 0x7F, 0xFF, 0x80])
+    )
+    with pytest.raises(ValueError, match="format code 7"):
+        decode_audio(mulaw)
 
 
 def test_feature_extraction_shapes(spark, sf_dir):
@@ -192,228 +223,3 @@ def test_decode_video_y4m_plane_layout():
     assert (frames[0, 0].ravel() == y0).all()
     assert (frames[0, 1] == 100).all() and (frames[0, 2] == 200).all()
     assert (frames[1].ravel() == np.frombuffer(f1, dtype=np.uint8)).all()
-
-
-def test_png_roundtrip_all_encoder_filters():
-    import numpy as np
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        decode_image,
-        encode_png,
-    )
-
-    rng = np.random.RandomState(7)
-    rgb = rng.randint(0, 256, (5, 9, 3), dtype=np.uint8)
-    grey = rng.randint(0, 256, (6, 11), dtype=np.uint8)
-    for ft in (0, 1, 2):
-        assert (decode_image(encode_png(rgb, ft), "png") == rgb).all()
-        assert (decode_image(encode_png(grey, ft), "png") == grey).all()
-
-
-def test_png_unfilter_average_and_paeth():
-    # the encoder never emits filters 3/4; build the filtered raster by
-    # hand from the spec's reconstruction equations and check the
-    # decoder inverts them
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        PNG_SIG,
-        decode_image,
-    )
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, (4, 6, 3), dtype=np.uint8)
-    h, w, bpp = img.shape
-    flat = img.reshape(h, w * bpp).astype(int)
-    lines = b""
-    for y, ft in zip(range(h), (0, 3, 4, 3)):
-        cur = flat[y]
-        prev = flat[y - 1] if y else np.zeros(w * bpp, int)
-        out = []
-        for x in range(w * bpp):
-            a = int(cur[x - bpp]) if x >= bpp else 0
-            b = int(prev[x])
-            c = int(prev[x - bpp]) if x >= bpp else 0
-            if ft == 0:
-                pred = 0
-            elif ft == 3:
-                pred = (a + b) // 2
-            else:
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-            out.append((int(cur[x]) - pred) % 256)
-        lines += bytes([ft]) + bytes(out)
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        PNG_SIG
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(lines))
-        + chunk(b"IEND", b"")
-    )
-    assert (decode_image(payload, "png") == img).all()
-
-
-def test_png_rejects_corruption():
-    import numpy as np
-    import pytest
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        decode_image,
-        encode_png,
-    )
-
-    good = bytearray(encode_png(np.zeros((2, 2, 3), np.uint8)))
-    bad = bytearray(good)
-    bad[40] ^= 0xFF  # flip a byte inside a chunk -> CRC mismatch
-    with pytest.raises(ValueError):
-        decode_image(bytes(bad), "png")
-    # jpg now has a REAL baseline decoder (r8) — a truncated payload is
-    # a ValueError, not the old NotImplementedError stub; progressive
-    # subsets still raise NotImplementedError (test_codecs_property).
-    with pytest.raises(ValueError):
-        decode_image(b"\xff\xd8\xff\xe0 jpeg", "jpg")
-
-
-def test_mulaw_expansion_matches_itu_table_points():
-    import numpy as np
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        decode_audio,
-        mulaw_expand,
-    )
-
-    # canonical G.711 table anchors
-    codes = np.array([0x00, 0x7F, 0xFF, 0x80], dtype=np.uint8)
-    got = mulaw_expand(codes)
-    assert got.tolist() == [-32124, 0, 0, 32124]
-    # monotone decreasing magnitude as code moves toward 0x7F/0xFF
-    neg = mulaw_expand(np.arange(0x00, 0x80, dtype=np.uint8))
-    assert (np.diff(neg) > 0).all() and (neg < 0).sum() == 127
-    # a fmt-7 WAV routes through the expansion
-    from ast_data_pipeline_spark.queries.multimodal import _mulaw_wav_header
-
-    payload = _mulaw_wav_header(4) + bytes([0x00, 0x7F, 0xFF, 0x80])
-    samples, rate = decode_audio(payload)
-    assert rate == 8000 and samples.tolist() == [-32124, 0, 0, 32124]
-
-
-def test_gif_roundtrip_random_and_runs():
-    import numpy as np
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        decode_image,
-        encode_gif,
-    )
-
-    rng = np.random.RandomState(7)
-    # random 12x8 (the query shape), 1x1 degenerate, and a 64x70 noise
-    # image (4480 px: crosses the 512/1024/2048/4096 width boundaries
-    # AND forces a mid-stream table reset at the 4096-entry cap)
-    for shape in [(12, 8), (1, 1), (64, 70), (3, 500)]:
-        a = rng.randint(0, 256, size=shape).astype(np.uint8)
-        d = _gif_decode(encode_gif(a))
-        assert d.shape == a.shape and (d == a).all(), shape
-    # maximal runs exercise deep LZW chains + the KwKwK code case
-    a = np.zeros((80, 80), np.uint8)
-    assert (_gif_decode(encode_gif(a)) == a).all()
-    a = np.tile(np.arange(16, dtype=np.uint8).repeat(13), 40).reshape(40, -1)
-    assert (_gif_decode(encode_gif(a)) == a).all()
-    # decode_image routes by magic
-    a = rng.randint(0, 256, (12, 8)).astype(np.uint8)
-    assert (decode_image(encode_gif(a), "gif") == a).all()
-
-
-def test_gif_decoder_edge_cases():
-    import numpy as np
-    import pytest
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _gif_decode,
-        _lzw_compress,
-        _lzw_decompress,
-        encode_gif,
-    )
-
-    # small-palette LZW streams (mcs < 8) roundtrip
-    rng = np.random.RandomState(11)
-    for mcs in (2, 4, 7):
-        data = bytes(rng.randint(0, 1 << mcs, size=3000).astype(np.uint8))
-        assert _lzw_decompress(_lzw_compress(data, mcs), mcs) == data
-    good = bytearray(encode_gif(np.arange(96, dtype=np.uint8).reshape(12, 8)))
-    # GIF89a signature + a skippable extension block before the image
-    g89 = bytearray(good)
-    g89[:6] = b"GIF89a"
-    lsd_end = 6 + 7 + 768  # header + logical screen descriptor + 256-grey GCT
-    ext = b"\x21\xfe\x05hello\x00"  # comment extension, one sub-block
-    g89 = g89[:lsd_end] + ext + g89[lsd_end:]
-    assert (
-        _gif_decode(bytes(g89)) == np.arange(96, dtype=np.uint8).reshape(12, 8)
-    ).all()
-    # interlace flag (descriptor packed byte): r8 decodes it for real —
-    # the stored rows are treated as the 4-pass order, so flagging
-    # sequentially-stored data yields the row-permuted image
-    inter = bytearray(good)
-    inter[lsd_end + 9] |= 0x40
-    arr = np.arange(96, dtype=np.uint8).reshape(12, 8)
-    order = np.concatenate(
-        [np.arange(s, 12, p) for s, p in ((0, 8), (4, 8), (2, 4), (1, 2))]
-    )
-    expect = np.empty_like(arr)
-    expect[order] = arr
-    assert (_gif_decode(bytes(inter)) == expect).all()
-    # truncated LZW stream (strip trailer + last sub-block) -> ValueError
-    with pytest.raises(ValueError):
-        _lzw_decompress(b"", 8)
-    # non-grey palette returns RGB
-    rgb_gif = bytearray(good)
-    rgb_gif[lsd_end - 768 + 1] = 200  # palette entry 0: green channel differs
-    out = _gif_decode(bytes(rgb_gif))
-    assert out.ndim == 3 and out.shape == (12, 8, 3)
-
-
-def test_bmp_roundtrip_padding_and_orientation():
-    import numpy as np
-    import pytest
-
-    from ast_data_pipeline_spark.operators.multimodal import (
-        _bmp_decode,
-        decode_image,
-        encode_bmp,
-    )
-
-    rng = np.random.RandomState(3)
-    # widths 6/7 force 2- and 3-byte row padding; 8 is 4-aligned
-    for shape in [(12, 8), (5, 6), (3, 7), (1, 1)]:
-        a = rng.randint(0, 256, size=shape).astype(np.uint8)
-        d = _bmp_decode(encode_bmp(a))
-        assert d.shape == a.shape and (d == a).all(), shape
-    rgb = rng.randint(0, 256, (5, 6, 3)).astype(np.uint8)
-    assert (_bmp_decode(encode_bmp(rgb)) == rgb).all()
-    assert (decode_image(encode_bmp(rgb), "bmp") == rgb).all()
-    # orientation: encoder writes bottom-up; flipping to a negative
-    # height header must yield the vertically mirrored image
-    import struct
-
-    payload = bytearray(encode_bmp(rgb))
-    w, h = struct.unpack_from("<ii", payload, 18)
-    struct.pack_into("<ii", payload, 18, w, -h)
-    flipped = _bmp_decode(bytes(payload))
-    assert (flipped == rgb[::-1]).all()
-    # unsupported subsets raise, truncation raises
-    bad = bytearray(encode_bmp(rgb))
-    struct.pack_into("<H", bad, 28, 8)  # bpp = 8
-    with pytest.raises(NotImplementedError):
-        _bmp_decode(bytes(bad))
-    with pytest.raises(ValueError):
-        _bmp_decode(encode_bmp(rgb)[:-10])
