@@ -24,8 +24,9 @@ only the K x dim centroid matrix ever crosses the driver boundary.
 Float-sum reduction order makes iterated centroids non-bit-
 reproducible across engines, so this operator is pytest-verified
 (inertia monotonicity, convergence, determinism on a fixed frame)
-rather than DuckDB-oracled; the single assignment step IS oracled as
-``x_kmeans_assign``.
+rather than DuckDB-oracled; a single assignment step (argmax cosine
+over K seed centroids) IS oracled, as the coarse-cell assignment of
+``x_ivf_nprobe_sweep``.
 """
 
 from __future__ import annotations

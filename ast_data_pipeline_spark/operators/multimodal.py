@@ -62,8 +62,6 @@ FEATURE_SCHEMA = (
     "histogram8 array<double>, feature_ok boolean"
 )
 
-SUPPORTED_FAKE = {"png", "jpg", "wav"}
-
 # Leading bytes that mark a payload as an image for extract_features:
 # JPEG SOI, binary Netpbm, and the PNG/GIF/BMP signatures, which
 # decode_image rejects by name.
@@ -159,10 +157,11 @@ def extract_features(df: DataFrame) -> DataFrame:
     and the PNG/GIF/BMP signatures reach it too, so a payload in a
     format without a decoder raises instead of being featurized as
     raw bytes. Payloads with no image signature (the synthetic text
-    payloads) take the deterministic fake: features over the raw
-    payload bytes. Either way the Spark-side shape — Arrow binary
-    batches in, fixed-schema feature rows out — is exactly what a
-    production decode/extract stage uses.
+    payloads) get features over their raw bytes and ``feature_ok``
+    false: ``feature_ok`` is true only for a decoded raster. Either
+    way the Spark-side shape — Arrow binary batches in, fixed-schema
+    feature rows out — is exactly what a production decode/extract
+    stage uses.
     """
 
     def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -181,7 +180,7 @@ def extract_features(df: DataFrame) -> DataFrame:
                     vals = decode_image(bytes(payload), fmt).ravel()
                     ok = True
                 else:
-                    vals, ok = raw, fmt in SUPPORTED_FAKE
+                    vals, ok = raw, False
                 hist = (
                     np.histogram(vals, bins=8, range=(0, 256))[0]
                     if len(vals)

@@ -159,35 +159,6 @@ def a4_distinct_profile(spark, sf_dir):
 
 
 @register(
-    "q18_large_volume_customers",
-    oracle=f"""
-SELECT c_custkey, c_name, o_orderkey,
-       {dsum_sql('l_quantity')} AS total_qty
-FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-              JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name, o_orderkey
-HAVING round(sum((l_quantity)::DECIMAL(30,10)), 4)::DOUBLE > 150
-ORDER BY total_qty DESC, o_orderkey
-""",
-    doc="TPC-H Q18 shape: aggregate-with-HAVING over a join — the "
-    "post-aggregation filter face (HAVING == filter after groupBy).",
-    tags=("aggregate", "join"),
-)
-def q18_large_volume_customers(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    customer = load(spark, sf_dir, "customer")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(customer, orders.o_custkey == customer.c_custkey)
-        .groupBy("c_custkey", "c_name", "o_orderkey")
-        .agg(dsum("l_quantity").alias("total_qty"))
-        .filter(F.col("total_qty") > 150)
-        .orderBy(F.col("total_qty").desc(), "o_orderkey")
-    )
-
-
-@register(
     "a4_approx_profile",
     # Error-band oracle (VERDICT r12 #4, closing the registry's last
     # no_oracle row): the sketch VALUES are engine-specific (Spark
@@ -325,78 +296,6 @@ def a6_distinct_by_key_first(spark, sf_dir):
 # generalize that to the full lattice, computed in ONE pass: Spark
 # expands grouping sets inside a single hash-aggregate + one shuffle,
 # not one job per level.
-
-_GID_SQL = (
-    "(GROUPING(o_orderpriority) * 2 + GROUPING(o_orderstatus))::BIGINT AS gid"
-)
-
-
-@register(
-    "a_rollup_priority_status",
-    oracle=f"""
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(o_orderstatus, 'ALL')  AS status,
-       {_GID_SQL},
-       count(*)::BIGINT AS n_orders,
-       {dsum_sql('o_totalprice')} AS sum_total
-FROM orders
-GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-""",
-    doc="Hierarchical subtotals: (priority, status) -> (priority) -> "
-    "grand total, one hash-aggregate pass. grouping_id() disambiguates "
-    "subtotal rows from real NULL groups.",
-    tags=("aggregate", "rollup"),
-)
-def a_rollup_priority_status(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_total"),
-        )
-        .select(
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            "gid",
-            "n_orders",
-            "sum_total",
-        )
-    )
-
-
-@register(
-    "a_cube_priority_status",
-    oracle=f"""
-SELECT coalesce(o_orderpriority, 'ALL') AS priority,
-       coalesce(o_orderstatus, 'ALL')  AS status,
-       {_GID_SQL},
-       count(*)::BIGINT AS n_orders,
-       {dsum_sql('o_totalprice')} AS sum_total
-FROM orders
-GROUP BY CUBE (o_orderpriority, o_orderstatus)
-""",
-    doc="Full lattice: every subset of {priority, status} in one pass.",
-    tags=("aggregate", "rollup"),
-)
-def a_cube_priority_status(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    return (
-        orders.cube("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.grouping_id().cast("long").alias("gid"),
-            F.count(F.lit(1)).alias("n_orders"),
-            dsum("o_totalprice").alias("sum_total"),
-        )
-        .select(
-            F.coalesce("o_orderpriority", F.lit("ALL")).alias("priority"),
-            F.coalesce("o_orderstatus", F.lit("ALL")).alias("status"),
-            "gid",
-            "n_orders",
-            "sum_total",
-        )
-    )
 
 
 @register(
@@ -560,53 +459,6 @@ def a_mode_median(spark, sf_dir):
     )
 
 
-N_BINS = 20
-
-
-@register(
-    "a_histogram_equiwidth",
-    oracle=f"""
-WITH b AS (
-  SELECT min(o_totalprice) AS lo, max(o_totalprice) AS hi FROM orders
-)
-SELECT least(floor(((o.o_totalprice - b.lo) / (b.hi - b.lo)) * {N_BINS}),
-             {N_BINS - 1})::BIGINT AS bin,
-       count(*)::BIGINT AS n_orders,
-       {dsum_sql('o.o_totalprice')} AS bin_total
-FROM orders o, b
-GROUP BY 1
-""",
-    doc="Equal-width histogram over o_totalprice: pass 1 computes "
-    "exact min/max (partial-agg, one row), which broadcasts back for "
-    "a single binning scan — floor(((x-lo)/(hi-lo))*N) clamped to "
-    "N-1. min/max and per-row IEEE arithmetic are order-insensitive, "
-    "so bins are bit-exact across engines; only the per-bin totals "
-    "need decimal summation. At 100 TB: two fact scans, each a "
-    "map-side partial agg; the one-row bounds frame is a broadcast "
-    "nested-loop of cardinality 1.",
-    tags=("aggregate", "extension"),
-)
-def a_histogram_equiwidth(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    bounds = orders.agg(
-        F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
-    )
-    binned = orders.crossJoin(F.broadcast(bounds)).select(
-        F.least(
-            F.floor(
-                ((F.col("o_totalprice") - F.col("lo")) / (F.col("hi") - F.col("lo")))
-                * N_BINS
-            ),
-            F.lit(N_BINS - 1),
-        ).alias("bin"),
-        "o_totalprice",
-    )
-    return binned.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        dsum("o_totalprice").alias("bin_total"),
-    )
-
-
 @register(
     "a_exact_quantiles",
     oracle="""
@@ -759,7 +611,7 @@ FROM assigned GROUP BY 1, 2
     doc="Equi-depth histogram per group: 8 value-bounded buckets whose "
     "bounds are the exact k/8 quantiles (distributed rank selection, "
     "no global sort) — the CBO column statistic, next to the "
-    "equi-WIDTH histogram (a_histogram_equiwidth). Bounds broadcast; "
+    "equi-WIDTH bins of a_psi_drift. Bounds broadcast; "
     "assignment is a chained comparison in codegen; one count "
     "shuffle.",
     tags=("aggregate", "extension"),
@@ -3280,69 +3132,6 @@ def x_pandas_udf_checksum(spark, sf_dir):
 
 
 @register(
-    "a_gini_concentration",
-    # Corpus-concentration report: the Gini coefficient of per-doc
-    # token counts within each source — the one-number answer to "is
-    # this source a few huge documents or many comparable ones", read
-    # next to the mixture weights when balancing training data. Exact
-    # rank formula G = 2*sum(i * x_i) / (n * sum x) - (n + 1)/n over
-    # the value-sorted sequence; sum(i * x_i) is an exact integer, so
-    # G is a fixed rational expression — bit-equal both engines. The
-    # rank window partitions by source (never a global sort).
-    oracle="""
-WITH toks AS (
-  SELECT source, doc_id, len(string_split(text, ' '))::BIGINT AS x
-  FROM documents
-),
-ranked AS (
-  SELECT source, x,
-         row_number() OVER (PARTITION BY source ORDER BY x, doc_id) AS i,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM toks
-)
-SELECT source,
-       max(n)::BIGINT AS n_docs,
-       sum(x)::BIGINT AS total_tokens,
-       2.0 * sum(i * x) / (max(n) * sum(x))
-         - (max(n) + 1.0) / max(n) AS gini
-FROM ranked GROUP BY source
-""",
-    doc="Gini concentration of per-doc token counts WITHIN each source "
-    "(exact sorted-rank formula, integer moments, per-source windows) "
-    "— the within-source complement of x_gini_source_concentration's "
-    "across-source mixture Gini: that one asks whether the CORPUS is "
-    "balanced, this one whether each source is a few huge documents "
-    "or many comparable ones.",
-    tags=("aggregates", "extension"),
-)
-def a_gini_concentration(spark, sf_dir):
-    from pyspark.sql import Window as W
-
-    docs = load(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source",
-        "doc_id",
-        F.size(F.split("text", " ")).cast("long").alias("x"),
-    )
-    w = W.partitionBy("source")
-    ranked = toks.select(
-        "source",
-        "x",
-        F.row_number().over(w.orderBy("x", "doc_id")).alias("i"),
-        F.count(F.lit(1)).over(w).alias("n"),
-    )
-    return ranked.groupBy("source").agg(
-        F.max("n").cast("long").alias("n_docs"),
-        F.sum("x").cast("long").alias("total_tokens"),
-        (
-            F.lit(2.0) * F.sum(F.col("i") * F.col("x"))
-            / (F.max("n") * F.sum("x"))
-            - (F.max("n") + F.lit(1.0)) / F.max("n")
-        ).alias("gini"),
-    )
-
-
-@register(
     "a_welch_ttest",
     # Welch's unequal-variance t-test (public textbook statistic; the
     # two-sample mean comparison that doesn't assume pooled variance):
@@ -3711,93 +3500,6 @@ def a_t_closeness(spark, sf_dir):
         .otherwise("blocked")
         .alias("t_band"),
     ).orderBy("nationkey", "segment")
-
-
-CAPTURE_MOD_A = 5   # sample A: ~1/5 of docs by one hash gate
-CAPTURE_MOD_B = 7   # sample B: ~1/7 by an independent gate
-
-
-@register(
-    "a_capture_recapture",
-    # Chapman's capture-recapture estimator (public ecology/statistics
-    # method; in data engineering it's how you estimate TOTAL corpus /
-    # web size from two independent crawls' overlap without ever
-    # counting the whole thing): draw two independent deterministic
-    # samples via md5 gates with coprime moduli, count the overlap,
-    # and estimate N_hat = (n1+1)(n2+1)/(m+1) - 1. The estimate, its
-    # standard error, and the true N (known here — that's the eval)
-    # are all exact integer/rational arithmetic. Sampling gates are
-    # scan filters (no shuffle); the overlap is one aggregate. The
-    # same pattern estimates dedup-cluster counts or join sizes from
-    # samples at 100 TB, where the exact count is a full pass you'd
-    # rather not pay.
-    oracle=f"""
-WITH tagged AS (
-  SELECT doc_id,
-         (('0x' || substr(md5('capA|' || doc_id::VARCHAR), 1, 8))::BIGINT
-           % {CAPTURE_MOD_A}) = 0 AS in_a,
-         (('0x' || substr(md5('capB|' || doc_id::VARCHAR), 1, 8))::BIGINT
-           % {CAPTURE_MOD_B}) = 0 AS in_b
-  FROM documents
-),
-m AS (
-  SELECT count(*)::BIGINT AS n_true,
-         count(*) FILTER (WHERE in_a)::BIGINT AS n1,
-         count(*) FILTER (WHERE in_b)::BIGINT AS n2,
-         count(*) FILTER (WHERE in_a AND in_b)::BIGINT AS m_overlap
-  FROM tagged
-)
-SELECT n_true, n1, n2, m_overlap,
-       (n1 + 1)::DOUBLE * (n2 + 1) / (m_overlap + 1) - 1 AS n_chapman,
-       sqrt((n1 + 1)::DOUBLE * (n2 + 1) * (n1 - m_overlap) * (n2 - m_overlap)
-            / ((m_overlap + 1)::DOUBLE * (m_overlap + 1) * (m_overlap + 2)))
-         AS stderr,
-       ((n1 + 1)::DOUBLE * (n2 + 1) / (m_overlap + 1) - 1 - n_true)
-         / n_true AS rel_error
-FROM m
-""",
-    doc="Chapman capture-recapture corpus-size estimate from two "
-    "independent md5-gated samples (coprime moduli): N_hat = "
-    "(n1+1)(n2+1)/(m+1)-1 with its standard error, evaluated against "
-    "the true count — the crawl-overlap size-estimation trick, as an "
-    "eval-as-query. Scan-filter sampling, one aggregate, exact "
-    "rationals.",
-    tags=("aggregates", "stats", "extension"),
-)
-def a_capture_recapture(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-
-    def gate(salt, mod):
-        return (
-            F.conv(F.substring(F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 8), 16, 10)
-            .cast("long") % mod == 0
-        )
-
-    tagged = docs.select(
-        "doc_id",
-        gate("capA|", CAPTURE_MOD_A).alias("in_a"),
-        gate("capB|", CAPTURE_MOD_B).alias("in_b"),
-    )
-    m = tagged.agg(
-        F.count(F.lit(1)).alias("n_true"),
-        F.count(F.when(F.col("in_a"), 1)).alias("n1"),
-        F.count(F.when(F.col("in_b"), 1)).alias("n2"),
-        F.count(F.when(F.col("in_a") & F.col("in_b"), 1)).alias("m_overlap"),
-    )
-    nh = (F.col("n1") + 1).cast("double") * (F.col("n2") + 1) / (F.col("m_overlap") + 1) - 1
-    return m.select(
-        "n_true", "n1", "n2", "m_overlap",
-        nh.alias("n_chapman"),
-        F.sqrt(
-            (F.col("n1") + 1).cast("double") * (F.col("n2") + 1)
-            * (F.col("n1") - F.col("m_overlap")) * (F.col("n2") - F.col("m_overlap"))
-            / (
-                (F.col("m_overlap") + 1).cast("double")
-                * (F.col("m_overlap") + 1) * (F.col("m_overlap") + 2)
-            )
-        ).alias("stderr"),
-        ((nh - F.col("n_true")) / F.col("n_true")).alias("rel_error"),
-    )
 
 
 @register(

@@ -485,76 +485,6 @@ def x_fuzzy_match(spark, sf_dir):
     )
 
 
-def _est_quality_oracle() -> str:
-    est_match = " + ".join(
-        f"CASE WHEN sa.h{i} = sb.h{i} THEN 1 ELSE 0 END" for i in range(NUM_HASHES)
-    )
-    return f"""WITH {_minhash_ctes()}
-SELECT c.doc_a, c.doc_b,
-       ({est_match})::INT AS est_match,
-       len(list_intersect(da.shingles, db.shingles))::INT AS inter_size,
-       len(list_distinct(list_concat(da.shingles, db.shingles)))::INT AS union_size,
-       ({est_match})::DOUBLE / {NUM_HASHES} AS jaccard_est,
-       len(list_intersect(da.shingles, db.shingles))::DOUBLE
-         / len(list_distinct(list_concat(da.shingles, db.shingles)))::DOUBLE AS jaccard
-FROM cand c
-JOIN sig sa ON c.doc_a = sa.doc_id JOIN sig sb ON c.doc_b = sb.doc_id
-JOIN docsets da ON c.doc_a = da.doc_id JOIN docsets db ON c.doc_b = db.doc_id
-"""
-
-
-@register(
-    "x_minhash_est_quality",
-    oracle=_est_quality_oracle(),
-    doc="Sketch-quality report for the MinHash pipeline: for every LSH "
-    "candidate pair, the signature-estimated Jaccard (matching minhash "
-    "components / k) next to the EXACT set Jaccard — the monitoring "
-    "pass that tells you whether k and the band config still fit the "
-    "corpus before trusting the dedup decisions at 100 TB. All "
-    "comparisons are integer counts (plus two int/int divisions, "
-    "IEEE-identical cross-engine). Plan: signature agg (one shuffle) + "
-    "band self-join candidates + two id-keyed joins back to the "
-    "signature and shingle-set tables — candidates are the tiny side.",
-    tags=("dedup", "extension"),
-)
-def x_minhash_est_quality(spark, sf_dir):
-    from ..operators.dedup import candidate_pairs, lsh_bands, minhash_signatures
-
-    docs = load(spark, sf_dir, "documents").withColumn("w", words_col(F.col("text")))
-    docsets = (
-        docs.filter(F.size("w") >= 2)
-        .select("doc_id", word_shingles("w", 2))
-    )
-    exploded = docsets.select("doc_id", F.explode("shingles").alias("shingle"))
-    sig = minhash_signatures(exploded, NUM_HASHES).transform(lineage_cut_lazy)
-    cand = candidate_pairs(lsh_bands(sig, NUM_HASHES, ROWS_PER_BAND))
-    sa = sig.select(
-        F.col("doc_id").alias("doc_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(NUM_HASHES)]
-    )
-    sb = sig.select(
-        F.col("doc_id").alias("doc_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(NUM_HASHES)]
-    )
-    da = docsets.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("set_a"))
-    db = docsets.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("set_b"))
-    est_match = sum(
-        (F.col(f"a{i}") == F.col(f"b{i}")).cast("int") for i in range(NUM_HASHES)
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b"))
-    union = F.size(F.array_union("set_a", "set_b"))
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b").join(da, "doc_a").join(db, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            est_match.cast("int").alias("est_match"),
-            inter.cast("int").alias("inter_size"),
-            union.cast("int").alias("union_size"),
-            (est_match.cast("double") / NUM_HASHES).alias("jaccard_est"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-    )
-
-
 @register(
     "x_dedup_transitivity",
     oracle=f"""WITH {_minhash_ctes()},
@@ -1475,65 +1405,6 @@ def x_incremental_dedup(spark, sf_dir):
     return incremental_dedup_screen(
         docs.filter(is_new), docs.filter(~is_new),
         NUM_HASHES, ROWS_PER_BAND, JACCARD_T,
-    )
-
-
-def _leakage_oracle() -> str:
-    fold = "('0x' || substr(md5({id}::VARCHAR), 1, 4))::INT % 5"
-    return f"""WITH {_minhash_ctes()}
-SELECT ({fold.format(id='doc_a')} = {fold.format(id='doc_b')}) AS same_fold,
-       count(*)::BIGINT AS n_pairs,
-       min(doc_a) AS example_doc_a,
-       min(doc_b) AS example_doc_b
-FROM pairs
-GROUP BY 1
-"""
-
-
-@register(
-    "x_split_leakage_check",
-    oracle=_leakage_oracle(),
-    # Train/eval leakage census: near-duplicate pairs whose members
-    # land in DIFFERENT k-fold splits are contamination — the model
-    # sees an eval document's twin during training. The check every
-    # CV/benchmark setup should run after x_kfold_assign: if
-    # cross-fold near-dup pairs exist, either re-split by cluster id
-    # (x_dedup_clusters as the grouping key) or drop the twins.
-    doc="Near-dup pairs grouped by fold agreement (same md5-mod-5 "
-    "fold as x_kfold_assign): cross-fold pairs quantify train/eval "
-    "contamination. Pair generation is the banded MinHash+LSH flow "
-    "(never all-pairs); the census adds one 2-key aggregate. The "
-    "deterministic example ids make a red row actionable.",
-    tags=("dedup", "sampling", "extension"),
-)
-def x_split_leakage_check(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").withColumn("w", words_col(F.col("text")))
-    docsets = (
-        docs.filter(F.size("w") >= 2)
-        .select("doc_id", word_shingles("w", 2))
-    )
-    pairs = minhash_neardup_compact(docsets, NUM_HASHES, ROWS_PER_BAND, JACCARD_T)
-
-    def fold(c):
-        return (
-            F.conv(F.substring(F.md5(F.col(c).cast("string")), 1, 4), 16, 10)
-            .cast("long")
-            .cast("int")
-            % 5
-        )
-
-    return (
-        pairs.select(
-            (fold("doc_a") == fold("doc_b")).alias("same_fold"),
-            "doc_a",
-            "doc_b",
-        )
-        .groupBy("same_fold")
-        .agg(
-            F.count(F.lit(1)).alias("n_pairs"),
-            F.min("doc_a").alias("example_doc_a"),
-            F.min("doc_b").alias("example_doc_b"),
-        )
     )
 
 

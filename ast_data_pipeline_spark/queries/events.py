@@ -746,48 +746,6 @@ def e_rolling_wau(spark, sf_dir):
 
 
 @register(
-    "e_pct_change_daily",
-    # Day-over-day percent change of daily event value totals per
-    # type — the growth-rate transform behind every trend dashboard.
-    # Daily totals go through the exact-decimal sum, so the lag and
-    # the (cur - prev) / prev division operate on identical doubles
-    # in both engines; the first day reports NULL change.
-    oracle=f"""
-WITH daily AS (
-  SELECT event_type, strftime(ts::DATE, '%Y-%m-%d') AS day,
-         {dsum_sql('value')} AS total
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type, day, total,
-       lag(total) OVER (PARTITION BY event_type ORDER BY day) AS prev_total,
-       (total - lag(total) OVER (PARTITION BY event_type ORDER BY day))
-         / lag(total) OVER (PARTITION BY event_type ORDER BY day) AS pct_change
-FROM daily
-""",
-    doc="Daily totals per event type with day-over-day percent change: "
-    "one (type, day) aggregate with map-side partials, then a lag "
-    "window over the tiny daily frame (|types| x |days| rows — "
-    "never corpus-sized). Exact-decimal totals make the derived "
-    "ratio bit-identical across engines.",
-    tags=("events", "window", "extension"),
-)
-def e_pct_change_daily(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_format(F.to_date("ts"), "yyyy-MM-dd").alias("day")
-    ).agg(dsum("value").alias("total"))
-    w = Window.partitionBy("event_type").orderBy("day")
-    prev = F.lag("total").over(w)
-    return daily.select(
-        "event_type",
-        "day",
-        "total",
-        prev.alias("prev_total"),
-        ((F.col("total") - prev) / prev).alias("pct_change"),
-    )
-
-
-@register(
     "e_dow_seasonality",
     # Weekday seasonality profile: event counts and within-type share
     # per ISO day-of-week — the seasonality fingerprint that feeds
@@ -830,57 +788,6 @@ def e_dow_seasonality(spark, sf_dir):
             "n",
             (F.col("n").cast("double") / F.col("total")).alias("share"),
         )
-    )
-
-
-@register(
-    "e_user_activity_zscore",
-    # Per-user activity z-scores from exact moments (the a_corr_matrix
-    # recipe): user event counts, the population mean/std derived from
-    # decimal-exact sums, and the standardized score evaluated with
-    # textually identical double arithmetic — deterministic at any
-    # cluster size, unlike streaming stddev(). Sample std (n-1).
-    oracle=f"""
-WITH u AS (
-  SELECT user_id, count(*)::BIGINT AS n_events FROM events GROUP BY 1
-),
-m AS (
-  SELECT count(*)::DOUBLE AS n,
-         {dsum_sql('n_events::DOUBLE')} AS s1,
-         {dsum_sql('n_events::DOUBLE * n_events::DOUBLE')} AS s2
-  FROM u
-)
-SELECT u.user_id, u.n_events,
-       (u.n_events - s1 / n) / sqrt((s2 - s1 * s1 / n) / (n - 1)) AS zscore,
-       abs((u.n_events - s1 / n)
-           / sqrt((s2 - s1 * s1 / n) / (n - 1))) > 2::DOUBLE AS is_outlier
-FROM u, m
-""",
-    doc="User-activity z-scores: one user-key count aggregate, a "
-    "1-row exact-moment reduce broadcast back over the per-user "
-    "frame, and the standardization formula in identical double "
-    "order — the power-user / bot screen. Only the count aggregate "
-    "touches the fact.",
-    tags=("events", "stats", "extension"),
-)
-def e_user_activity_zscore(spark, sf_dir):
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
-    nev = F.col("n_events").cast("double")
-    m = u.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        dsum(nev).alias("s1"),
-        dsum(nev * nev).alias("s2"),
-    )
-    z = (F.col("n_events") - F.col("s1") / F.col("n")) / F.sqrt(
-        (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"))
-        / (F.col("n") - 1)
-    )
-    return u.crossJoin(F.broadcast(m)).select(
-        "user_id",
-        "n_events",
-        z.alias("zscore"),
-        (F.abs(z) > F.lit(2.0)).alias("is_outlier"),
     )
 
 

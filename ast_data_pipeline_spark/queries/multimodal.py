@@ -58,7 +58,9 @@ def x_multimodal_meta(spark, sf_dir):
     # INTEGER counts (round(p * 96)) — exact in both engines, where
     # stringified normalized doubles would diverge on engine float
     # formatting. ASCII text lives in bins 1-3 only; all 8 are
-    # emitted (the fixed schema a feature store ingests).
+    # emitted (the fixed schema a feature store ingests). No payload
+    # carries an image signature, so none is decoded and feature_ok
+    # is false on every row.
     oracle="""
 SELECT doc_id,
        CASE WHEN doc_id % 3 = 0 THEN 'png'
@@ -71,7 +73,7 @@ SELECT doc_id,
          b -> len(list_filter(generate_series(1, 96),
                 i -> unicode(substr(t, i, 1)) // 32 = b))::VARCHAR),
          'string_agg', ';') AS histogram8,
-       true AS feature_ok
+       false AS feature_ok
 FROM (SELECT doc_id,
              substr(rpad(regexp_replace(text, '[^ -~]', '?', 'g'), 96, 'x'), 1, 96) AS t
       FROM documents)
@@ -79,8 +81,9 @@ FROM (SELECT doc_id,
     doc="Binary feature extraction via mapInPandas (Arrow binary batches "
     "in, fixed-schema features out) over the codec-less raw-byte path — "
     "mean byte + 8-bin histogram hash-verified against DuckDB's "
-    "independent code-point computation (real JPEG and Netpbm decodes "
-    "are oracled separately in x_multimodal_jpeg/ppm/ssim).",
+    "independent code-point computation, feature_ok false because "
+    "nothing is decoded (real JPEG and Netpbm decodes are oracled "
+    "separately in x_multimodal_jpeg/ppm/ssim, with feature_ok true).",
     tags=("multimodal",),
 )
 def x_multimodal_features(spark, sf_dir):

@@ -58,73 +58,6 @@ def x_hash_sample(spark, sf_dir):
     )
 
 
-@register(
-    "x_stratified_sample",
-    oracle=f"""
-WITH rates AS (
-  SELECT source, CASE WHEN (substr(source, 4)::INT) % 2 = 0
-                      THEN '40' ELSE '80' END AS cutoff
-  FROM (SELECT DISTINCT source FROM documents)
-)
-SELECT d.doc_id, d.source, d.lang
-FROM documents d JOIN rates r USING (source)
-WHERE substr(md5(d.doc_id::VARCHAR), 1, 2) < r.cutoff
-""",
-    doc="Stratified deterministic sample: per-stratum rates (25% for "
-    "even-numbered sources, 50% for odd) via a broadcast-joined rates "
-    "dim + hash gate — the reproducible form of df.sampleBy().",
-    tags=("sampling", "extension"),
-)
-def x_stratified_sample(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    rates = (
-        docs.select("source")
-        .distinct()
-        .withColumn(
-            "cutoff",
-            F.when(
-                F.substring("source", 4, 10).cast("int") % 2 == 0, F.lit("40")
-            ).otherwise(F.lit("80")),
-        )
-    )
-    return (
-        docs.join(F.broadcast(rates), "source")
-        .filter(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2) < F.col("cutoff"))
-        .select("doc_id", "source", "lang")
-    )
-
-
-@register(
-    "x_train_split",
-    oracle="""
-SELECT source,
-       CASE WHEN substr(md5(doc_id::VARCHAR), 1, 2) < 'cc' THEN 'train'
-            WHEN substr(md5(doc_id::VARCHAR), 1, 2) < 'e6' THEN 'val'
-            ELSE 'test' END AS split,
-       count(*)::BIGINT AS n_docs,
-       sum(n_chars)::BIGINT AS total_chars
-FROM documents
-GROUP BY source, split
-""",
-    doc="Deterministic train/val/test assignment via md5 hash ranges "
-    "(~80/10/10: cc=204, e6=230 of 256) — the reproducible split every "
-    "training pipeline needs: stateless, leakage-free (a doc's split "
-    "never depends on the rest of the corpus), identical on re-runs "
-    "and across engines. Reported as per-source split counts.",
-    tags=("sampling", "extension"),
-)
-def x_train_split(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents")
-    h2 = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 2)
-    split = (
-        F.when(h2 < "cc", "train").when(h2 < "e6", "val").otherwise("test")
-    )
-    return docs.groupBy("source", split.alias("split")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n_chars").alias("total_chars"),
-    )
-
-
 RANGE_N_BUCKETS = 8
 # Sample budget per output bucket (VERDICT r5 #2): the gate fraction is
 # derived from this, never fixed. 64k sample rows per boundary is far
@@ -934,71 +867,6 @@ def x_subsample_ci(spark, sf_dir):
 STRAT_NUM, STRAT_DEN = 1, 10  # exact 10% allocation per stratum
 
 
-@register(
-    "x_stratified_sample_exact",
-    # Exact-allocation stratified sampling: every source contributes
-    # EXACTLY ceil(n_g / 10) documents (the hash-gate samplers above
-    # are probabilistic — binomial counts around the rate; ablation
-    # protocols and eval-set builds need fixed per-stratum counts).
-    # Selection is the first ceil(n_g/10) docs by md5 rank within the
-    # stratum — deterministic, re-runnable, and engine-identical
-    # (lowercase-hex string order), with doc_id closing the unique
-    # order chain.
-    oracle=f"""
-WITH counted AS (
-  SELECT source, count(*)::BIGINT AS n_total FROM documents GROUP BY 1
-),
-ranked AS (
-  SELECT d.doc_id, d.source, c.n_total,
-         row_number() OVER (PARTITION BY d.source
-                            ORDER BY md5('strat|' || d.doc_id::VARCHAR),
-                                     d.doc_id) AS rk
-  FROM documents d JOIN counted c USING (source)
-)
-SELECT source, doc_id, rk::BIGINT AS sample_rank, n_total,
-       ((n_total * {STRAT_NUM} + {STRAT_DEN - 1}) // {STRAT_DEN})::BIGINT
-         AS n_target
-FROM ranked
-WHERE rk <= (n_total * {STRAT_NUM} + {STRAT_DEN - 1}) // {STRAT_DEN}
-""",
-    doc="Exact-count stratified sample: ceil(10%) of every source by "
-    "deterministic md5 rank — the fixed-allocation eval/ablation "
-    "split that probabilistic hash gates cannot give. One broadcast "
-    "of the per-source counts plus one source-PARTITIONED rank "
-    "window (the per-stratum bound is a column, so Spark's "
-    "WindowGroupLimit literal-limit pruning does not apply — each "
-    "stratum sorts within its partition, which scales with stratum "
-    "size); for a pathologically hot stratum swap in the two-level "
-    "value-bucket rank used by x_range_partition_bounds.",
-    tags=("sampling", "extension"),
-)
-def x_stratified_sample_exact(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    counted = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_total"))
-    target = F.expr(
-        f"(n_total * {STRAT_NUM} + {STRAT_DEN - 1}) div {STRAT_DEN}"
-    )
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.concat(F.lit("strat|"), F.col("doc_id").cast("string"))),
-        "doc_id",
-    )
-    return (
-        docs.join(F.broadcast(counted), "source")
-        .withColumn("rk", F.row_number().over(w).cast("long"))
-        .withColumn("n_target", target.cast("long"))
-        .filter(F.col("rk") <= F.col("n_target"))
-        .select(
-            "source",
-            "doc_id",
-            F.col("rk").alias("sample_rank"),
-            "n_total",
-            "n_target",
-        )
-    )
-
-
 ZORDER_BUCKETS_LOG2 = 4  # 16 files per layout
 # Morton math shared with the spatial domain (operators/spatial.py:
 # morton_key / morton_key_sql — magic-mask bit spreading, x in even
@@ -1119,56 +987,6 @@ def x_zorder_layout(spark, sf_dir):
             F.sum(F.col("ext_x") * F.col("ext_y")).cast("double")
             / F.count(F.lit(1))
         ).alias("avg_cell_area"),
-    )
-
-
-@register(
-    "x_percentile_normalize",
-    # Cross-source score calibration: raw quality scores are not
-    # comparable across heterogeneous sources (each source has its own
-    # score distribution), so mixture weighting and thresholding use
-    # the WITHIN-SOURCE percentile instead — rank / n over a
-    # (source)-partitioned window with the unique (score, doc_id)
-    # chain. Integer rank over integer count: one IEEE division,
-    # engine-identical. The rank-based twin of z-scoring that needs no
-    # distributional assumption.
-    oracle="""
-WITH w AS (
-  SELECT doc_id, source, n_chars,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_chars, doc_id) AS rk,
-         count(*) OVER (PARTITION BY source) AS n
-  FROM documents
-)
-SELECT doc_id, source, n_chars::BIGINT AS n_chars,
-       rk::BIGINT AS rank_in_source,
-       rk::DOUBLE / n AS percentile
-FROM w
-""",
-    doc="Within-source percentile normalization of the document length "
-    "score: rank/n over a source-partitioned window (unique order "
-    "chain), producing the cross-source-comparable [0,1] score that "
-    "mixture weighting and global thresholds need — heterogeneous "
-    "sources can't share a raw-score cut. Partitioned window only; "
-    "for a pathologically hot source the two-level value-bucket rank "
-    "applies as everywhere else.",
-    tags=("sampling", "extension"),
-)
-def x_percentile_normalize(spark, sf_dir):
-    from pyspark.sql import Window
-
-    docs = load(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy("n_chars", "doc_id")
-    n = Window.partitionBy("source")
-    return docs.select(
-        "doc_id",
-        "source",
-        F.col("n_chars").cast("long").alias("n_chars"),
-        F.row_number().over(w).cast("long").alias("rank_in_source"),
-        (
-            F.row_number().over(w).cast("double")
-            / F.count(F.lit(1)).over(n)
-        ).alias("percentile"),
     )
 
 

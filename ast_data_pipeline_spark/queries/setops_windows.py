@@ -429,41 +429,6 @@ def w_ntile_quartiles(spark, sf_dir):
 
 
 @register(
-    "a_cube_shipping",
-    oracle="""
-SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
-       coalesce(l_linestatus, 'ALL') AS linestatus,
-       count(*)::BIGINT AS n,
-       sum(l_quantity)::BIGINT AS total_qty
-FROM (SELECT l_returnflag, l_linestatus, l_quantity::BIGINT AS l_quantity
-      FROM lineitem)
-GROUP BY CUBE (l_returnflag, l_linestatus)
-""",
-    doc="CUBE over (returnflag, linestatus): all four grouping sets — "
-    "cells, both one-way margins, and the grand total — in ONE "
-    "aggregation pass (completes the grouping-set family next to the "
-    "crosstab's rollup). NULL grouping keys surface as 'ALL'; "
-    "quantities are integral in the synthetic data so the sum stays "
-    "in exact BIGINT.",
-    tags=("aggregates", "extension"),
-)
-def a_cube_shipping(spark, sf_dir):
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_linestatus", F.col("l_quantity").cast("long").alias("q")
-    )
-    return (
-        li.cube("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("q").alias("total_qty"))
-        .select(
-            F.coalesce("l_returnflag", F.lit("ALL")).alias("returnflag"),
-            F.coalesce("l_linestatus", F.lit("ALL")).alias("linestatus"),
-            "n",
-            "total_qty",
-        )
-    )
-
-
-@register(
     "u6_symmetric_difference",
     oracle="""
 WITH a AS (SELECT o_orderkey, o_totalprice FROM orders
@@ -509,7 +474,7 @@ def u6_symmetric_difference(spark, sf_dir):
 @register(
     "a_rollup_grouping_id",
     # ROLLUP + GROUPING_ID — the remaining grouping-sets face next to
-    # a_cube_shipping's CUBE and the crosstab margins: hierarchical
+    # a_grouping_sets and the crosstab margins: hierarchical
     # (year -> year,status -> grand total) subtotals in one pass, with
     # the machine-readable grouping bitmask (the column BI layers key
     # on to tell a subtotal row from a real NULL). One aggregation;

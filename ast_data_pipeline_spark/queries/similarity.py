@@ -253,55 +253,6 @@ def x_embedding_neardup(spark, sf_dir):
 K_CENTROIDS = 8  # deterministic seed centroids: vec_id < 8
 
 
-@register(
-    "x_kmeans_assign",
-    oracle=f"""
-WITH c AS (
-  SELECT vec_id AS cid, embedding AS cvec
-  FROM embeddings WHERE vec_id < {K_CENTROIDS}
-),
-scored AS (
-  SELECT e.vec_id, c.cid,
-         {dot_sql('e.embedding', 'c.cvec')}
-           / ({norm_sql('e.embedding')} * {norm_sql('c.cvec')}) AS sim
-  FROM embeddings e CROSS JOIN c
-)
-SELECT vec_id, cid AS centroid_id, sim
-FROM scored
-QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, cid) = 1
-""",
-    doc="Vector-quantization / k-means assignment step: every embedding "
-    "goes to its nearest of K deterministic seed centroids (vec_id<8 "
-    "stands in for a kmeans|| init). Centroids broadcast; one "
-    "map-side pass + hash-aggregate argmax, no shuffle of the vector "
-    "side beyond the agg. Full Lloyd iterations would repeat this "
-    "assignment with recomputed means (float-sum order makes iterated "
-    "centroids non-bit-reproducible, so the oracle pins the "
-    "assignment step).",
-    tags=("similarity", "extension"),
-)
-def x_kmeans_assign(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings")
-    cents = emb.filter(F.col("vec_id") < K_CENTROIDS).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cvec")
-    )
-    scored = emb.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        (
-            dot("embedding", "cvec") / (norm("embedding") * norm("cvec"))
-        ).alias("sim"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.max_by(
-            F.struct(F.col("cid"), F.col("sim")), F.struct(F.col("sim"), -F.col("cid"))
-        ).alias("b")
-    )
-    return best.select(
-        "vec_id", F.col("b.cid").alias("centroid_id"), F.col("b.sim").alias("sim")
-    )
-
-
 # The convergence-based Lloyd variant (operators/clustering.kmeans_lloyd)
 # is deliberately NOT a registered query: iterated float means aren't
 # bit-reproducible across engines, so its registry face was rows-only
@@ -455,83 +406,6 @@ def x_embedding_drift(spark, sf_dir):
     )
 
 
-@register(
-    "x_centroid_cosine_matrix",
-    # Pairwise cosine similarity between label-cohort centroids — the
-    # cluster-confusability matrix (which cohorts an ANN index or a
-    # classifier will struggle to separate). Centroids are
-    # decimal-exact per-dim means; dots and squared norms are 64-term
-    # sums through exact decimal joined on dim; one final
-    # a / (sqrt(b) * sqrt(c)) evaluated in identical order.
-    oracle=f"""
-WITH e AS (
-  SELECT label, i AS dim, embedding[i]::DOUBLE AS v
-  FROM embeddings, LATERAL unnest(generate_series(1, {64})) t(i)
-),
-lc AS (
-  SELECT label, dim, {davg_sql('v')} AS c FROM e GROUP BY 1, 2
-),
-pair_terms AS (
-  SELECT a.label AS label_a, b.label AS label_b,
-         a.c * b.c AS dotterm,
-         a.c * a.c AS aterm,
-         b.c * b.c AS bterm
-  FROM lc a JOIN lc b ON a.dim = b.dim AND a.label < b.label
-),
-agg AS (
-  SELECT label_a, label_b,
-         {dsum_sql('dotterm')} AS d,
-         {dsum_sql('aterm')} AS na2,
-         {dsum_sql('bterm')} AS nb2
-  FROM pair_terms GROUP BY 1, 2
-)
-SELECT label_a, label_b,
-       d / (sqrt(na2) * sqrt(nb2)) AS cosine
-FROM agg
-""",
-    doc="Cohort-centroid cosine matrix: the |labels|x64 centroid table "
-    "self-joins on dim (pair space |labels|^2 x 64 — centroid-sized, "
-    "never data-sized), per-pair exact-decimal sums, one closed-form "
-    "cosine. At 100 TB only the per-dim mean aggregate touches the "
-    "fact; everything after runs on KB-scale frames.",
-    tags=("similarity", "stats", "extension"),
-)
-def x_centroid_cosine_matrix(spark, sf_dir):
-    from ..functions.exact import davg, dsum
-
-    emb = load(spark, sf_dir, "embeddings")
-    e = emb.select(
-        "label", F.posexplode(F.col("embedding")).alias("dim0", "v0")
-    ).select(
-        "label",
-        (F.col("dim0") + 1).alias("dim"),
-        F.col("v0").cast("double").alias("v"),
-    )
-    lc = e.groupBy("label", "dim").agg(davg("v").alias("c"))
-    a, b = lc.alias("a"), lc.alias("b")
-    pair_terms = a.join(
-        b,
-        (F.col("a.dim") == F.col("b.dim"))
-        & (F.col("a.label") < F.col("b.label")),
-    ).select(
-        F.col("a.label").alias("label_a"),
-        F.col("b.label").alias("label_b"),
-        (F.col("a.c") * F.col("b.c")).alias("dotterm"),
-        (F.col("a.c") * F.col("a.c")).alias("aterm"),
-        (F.col("b.c") * F.col("b.c")).alias("bterm"),
-    )
-    agg = pair_terms.groupBy("label_a", "label_b").agg(
-        dsum("dotterm").alias("d"),
-        dsum("aterm").alias("na2"),
-        dsum("bterm").alias("nb2"),
-    )
-    return agg.select(
-        "label_a",
-        "label_b",
-        (F.col("d") / (F.sqrt("na2") * F.sqrt("nb2"))).alias("cosine"),
-    )
-
-
 _RECALL_ORACLE = f"""
 WITH b AS (
   SELECT vec_id, embedding,
@@ -657,50 +531,6 @@ def _probe_list_sql(bucket: str) -> str:
         [bucket] + [f"xor({bucket}, {1 << p})" for p in range(LSH_PLANES)]
     )
     return f"unnest([{probes}])"
-
-
-_MULTIPROBE_ORACLE = f"""
-WITH b AS (
-  SELECT vec_id, embedding,
-         {rh_lsh_bucket_sql('embedding', LSH_PLANES, EMB_DIM)} AS bucket
-  FROM embeddings
-),
-q AS (
-  SELECT vec_id AS q_id, embedding AS q_vec,
-         {_probe_list_sql('bucket')} AS bucket
-  FROM b WHERE vec_id % {QUERY_MOD} = 0
-),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         {dot_sql('q.q_vec', 'e.embedding')}
-           / ({norm_sql('q.q_vec')} * {norm_sql('e.embedding')}) AS sim
-  FROM b e JOIN q ON q.q_id <> e.vec_id AND q.bucket = e.bucket
-)
-SELECT q_id, vec_id,
-       row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id)::INT AS rank,
-       sim
-FROM scored
-QUALIFY rank <= {IVF_TOPK}
-"""
-
-
-@register(
-    "x_cosine_topk_multiprobe",
-    oracle=_MULTIPROBE_ORACLE,
-    doc="Multi-probe LSH top-k (VERDICT r5 #8): each query probes its "
-    "own sign-pattern bucket plus the 6 buckets at Hamming distance 1 "
-    "(the planes most likely to have flipped for a true neighbor) — "
-    "7x the candidate pool of the single-table variant for zero extra "
-    "index cost, the classic Lv et al. multi-probe trade. Plan shape "
-    "unchanged: the exploded probe set is still a broadcast-sized "
-    "query table, one corpus scan, bucket equi-join, per-query rank.",
-    tags=("similarity", "extension"),
-)
-def x_cosine_topk_multiprobe(spark, sf_dir):
-    emb = load(spark, sf_dir, "embeddings").withColumn(
-        "bucket", rh_lsh_bucket("embedding", LSH_PLANES, EMB_DIM)
-    )
-    return cosine_topk(_multiprobe_queries(emb), emb, IVF_TOPK, bucket="bucket")
 
 
 _MULTIPROBE_RECALL_ORACLE = f"""

@@ -38,51 +38,6 @@ def _langid_pred_sql() -> str:
 _SCORES_SQL = ",\n         ".join(
     f"{hit_ratio_sql('w', STOPWORDS[l])} AS score_{l}" for l in _LANGS
 )
-_SCORE_COLS = ", ".join(f"score_{l}" for l in _LANGS)
-
-
-@register(
-    "x_lang_id",
-    oracle=f"""
-WITH scored AS (
-  SELECT doc_id, lang,
-         {_SCORES_SQL}
-  FROM (SELECT doc_id, lang, string_split(lower(text), ' ') AS w FROM documents)
-)
-SELECT doc_id, lang AS actual_lang,
-       {_SCORE_COLS},
-       {_langid_pred_sql()} AS predicted_lang,
-       ({_langid_pred_sql()} = lang) AS correct
-FROM scored
-""",
-    doc="Language-ID heuristic: per-language stopword hit-ratio scores, "
-    "argmax with lexicographic tie-break. (The synthetic corpus is "
-    "language-agnostic word salad — the operator's mechanics, not its "
-    "accuracy, are under test.)",
-    tags=("text",),
-)
-def x_lang_id(spark, sf_dir):
-    docs = load(spark, sf_dir, "documents").withColumn(
-        "w", F.split(F.lower("text"), " ")
-    )
-    scored = docs.select(
-        "doc_id",
-        F.col("lang").alias("actual_lang"),
-        *[hit_ratio("w", STOPWORDS[l]).alias(f"score_{l}") for l in _LANGS],
-    )
-    best = F.greatest(*[F.col(f"score_{l}") for l in _LANGS])
-    # argmax with lexicographic tie-break: first lang (sorted) whose
-    # score equals the max wins — mirrors the oracle's CASE order
-    pred_expr = None
-    for l in _LANGS:
-        cond = F.col(f"score_{l}") == best
-        pred_expr = F.when(cond, F.lit(l)) if pred_expr is None else pred_expr.when(cond, F.lit(l))
-    return scored.select(
-        "doc_id", "actual_lang",
-        *[f"score_{l}" for l in _LANGS],
-        pred_expr.alias("predicted_lang"),
-        (pred_expr == F.col("actual_lang")).alias("correct"),
-    )
 
 
 @register(
@@ -828,7 +783,7 @@ _BPE_PAIRS_SQL = """
 
 
 # The learn loop as a recursive CTE, shared by the merge-table oracle
-# (x_bpe_merges) and the tokenizer-application oracle (x_bpe_tokenize).
+# (x_bpe_merges) and the tokenizer-application oracle (x_bpe_efficiency).
 _BPE_CTE_SQL = f"""
 wf AS (
   SELECT word, count(*)::BIGINT AS freq
@@ -948,59 +903,6 @@ def _bpe_learn(spark, sf_dir):
             ),
         )
     return cur, merges
-
-
-@register(
-    "x_bpe_tokenize",
-    oracle=f"""
-WITH RECURSIVE
-{_BPE_CTE_SQL},
-vocab AS (
-  SELECT word,
-         len(string_split(substr(state, 2, len(state) - 2), '||'))::BIGINT
-           AS n_toks
-  FROM bpe WHERE iter = {_BPE_MERGES}
-),
-docwords AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-)
-SELECT d.doc_id, count(*)::BIGINT AS n_words, sum(v.n_toks)::BIGINT AS n_bpe_tokens
-FROM (SELECT * FROM docwords WHERE word <> '') d
-JOIN vocab v USING (word)
-GROUP BY d.doc_id
-""",
-    doc="Tokenizer APPLICATION at corpus scale: the 3-merge BPE vocab "
-    "learned by x_bpe_merges becomes a (word -> token count) lookup "
-    "that BROADCASTS (vocabularies are KB-to-MB at any corpus size), "
-    "so tokenizing 100 TB is one scan + broadcast hash join + per-doc "
-    "aggregate — the corpus text never shuffles. Integer counts only; "
-    "oracle replays the learn loop in the recursive CTE and joins the "
-    "same vocab back.",
-    tags=("text", "extension"),
-)
-def x_bpe_tokenize(spark, sf_dir):
-    cur, _merges = _bpe_learn(spark, sf_dir)
-    vocab = cur.select(
-        "word",
-        F.expr(
-            "size(split(substring(state, 2, length(state) - 2), '\\\\|\\\\|'))"
-        )
-        .cast("long")
-        .alias("n_toks"),
-    )
-    docs = load(spark, sf_dir, "documents")
-    docwords = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("word")
-    ).filter(F.col("word") != "")
-    return (
-        docwords.join(F.broadcast(vocab), "word")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("n_toks").alias("n_bpe_tokens"),
-        )
-        .select("doc_id", "n_words", "n_bpe_tokens")
-    )
 
 
 @register(
@@ -1518,9 +1420,9 @@ def x_cdc_chunking(spark, sf_dir):
     # the learned BPE vocab — the compression-ratio number that
     # decides whether a tokenizer suits a corpus (a source full of
     # unseen morphology tokenizes long and eats context budget).
-    # Same learn CTE and broadcast-vocab application as
-    # x_bpe_tokenize, re-aggregated to the source grain with one
-    # exact integer division.
+    # The vocab learned by the recursive CTE is applied through a
+    # broadcast join (the corpus never shuffles), then re-aggregated
+    # to the source grain with one exact integer division.
     oracle=f"""
 WITH RECURSIVE
 {_BPE_CTE_SQL},
@@ -2725,107 +2627,6 @@ def x_packing_efficiency(spark, sf_dir):
     )
 
 
-@register(
-    "x_ffd_packing",
-    # TRUE first-fit-decreasing, registered and oracled (the pytest
-    # companion of x_packing_efficiency pins FFD <= both next-fit
-    # variants; this query makes FFD itself a first-class operator):
-    # items in length-decreasing order, each placed into the FIRST
-    # open pack it fits (revisitable-bins state — the property the
-    # single-pass next-fit lacks and the reason sorting pays here;
-    # Johnson's classic bound: FFD <= 11/9 OPT + 1). The bins vector
-    # is genuinely sequential state, so the engine runs it as an
-    # applyInPandas scan per source (parallel across sources) and the
-    # oracle replays it with a recursive CTE carrying a LIST column —
-    # first-fit selection via list_filter(range)[1], update via
-    # list_transform. Integer token arithmetic end to end.
-    oracle=f"""
-WITH RECURSIVE toks AS (
-  SELECT source, doc_id,
-         len(regexp_extract_all(text, '\\w+|[^\\w\\s]'))::BIGINT AS n_tokens
-  FROM documents
-),
-ordered AS (
-  SELECT source, n_tokens,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY n_tokens DESC, doc_id) AS rn,
-         count(*) OVER (PARTITION BY source) AS n_docs
-  FROM toks
-),
-state AS (
-  SELECT source, rn, n_docs, [n_tokens]::BIGINT[] AS bins
-  FROM ordered WHERE rn = 1
-  UNION ALL
-  SELECT o.source, o.rn, o.n_docs,
-         CASE WHEN len(list_filter(range(1, len(s.bins) + 1),
-                                   k -> s.bins[k] + o.n_tokens <= {PACKCMP_BUDGET})) > 0
-              THEN list_transform(range(1, len(s.bins) + 1),
-                     k -> CASE WHEN k = list_filter(range(1, len(s.bins) + 1),
-                                    j -> s.bins[j] + o.n_tokens <= {PACKCMP_BUDGET})[1]
-                               THEN s.bins[k] + o.n_tokens ELSE s.bins[k] END)
-              ELSE list_append(s.bins, o.n_tokens) END
-  FROM state s JOIN ordered o ON o.source = s.source AND o.rn = s.rn + 1
-)
-SELECT source,
-       len(bins)::BIGINT AS n_packs,
-       list_sum(bins)::BIGINT AS total_tokens,
-       (len(bins) * {PACKCMP_BUDGET} - list_sum(bins))::BIGINT AS waste_tokens,
-       list_sum(bins)::DOUBLE / (len(bins) * {PACKCMP_BUDGET}) AS efficiency
-FROM state WHERE rn = n_docs
-""",
-    doc="First-fit-decreasing bin packing as a first-class operator: "
-    "length-sorted atomic documents packed into revisitable bins per "
-    "source — applyInPandas sequential scan on the engine side, a "
-    "recursive CTE with LIST-typed bin state on the oracle side. "
-    "Completes the packing family: concat-and-chunk "
-    "(x_sequence_packing), single-pass next-fit comparison "
-    "(x_packing_efficiency), and the near-optimal offline packer.",
-    tags=("text", "extension"),
-)
-def x_ffd_packing(spark, sf_dir):
-    import pandas as pd
-
-    docs = load(spark, sf_dir, "documents")
-    _, bpe = token_counts(F.col("text"))
-    toks = docs.select("source", "doc_id", bpe.cast("bigint").alias("n_tokens"))
-
-    def pack(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["n_tokens", "doc_id"], ascending=[False, True])
-        bins: list[int] = []
-        for n in pdf["n_tokens"]:
-            n = int(n)
-            for i, fill in enumerate(bins):
-                if fill + n <= PACKCMP_BUDGET:
-                    bins[i] = fill + n
-                    break
-            else:
-                bins.append(n)
-        total = int(pdf["n_tokens"].sum())
-        return pd.DataFrame(
-            {
-                "source": [pdf["source"].iloc[0]],
-                "n_packs": [len(bins)],
-                "total_tokens": [total],
-            }
-        )
-
-    out = toks.groupBy("source").applyInPandas(
-        pack, "source string, n_packs long, total_tokens long"
-    )
-    return out.select(
-        "source",
-        "n_packs",
-        "total_tokens",
-        (F.col("n_packs") * PACKCMP_BUDGET - F.col("total_tokens"))
-        .cast("long")
-        .alias("waste_tokens"),
-        (
-            F.col("total_tokens").cast("double")
-            / (F.col("n_packs") * PACKCMP_BUDGET)
-        ).alias("efficiency"),
-    )
-
-
 VOCAB_COVERAGE_KS = (10, 100, 1000)
 
 
@@ -2912,7 +2713,7 @@ def x_vocab_coverage(spark, sf_dir):
 
 @register(
     "x_langid_confusion",
-    # The eval face of x_lang_id: full confusion matrix of the
+    # The eval face of the stopword language id: full confusion matrix of the
     # stopword-ratio classifier against the labeled lang column, with
     # per-actual-language support and recall — the table a model card
     # reports. (On this language-agnostic word-salad corpus the

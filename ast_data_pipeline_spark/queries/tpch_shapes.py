@@ -215,45 +215,6 @@ def q6_forecast_revenue(spark, sf_dir):
 
 
 @register(
-    "q12_priority_by_linestatus",
-    oracle="""
-SELECT l.l_linestatus,
-       sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END)::BIGINT AS high_line_count,
-       sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                THEN 1 ELSE 0 END)::BIGINT AS low_line_count
-FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-  AND l.l_returnflag = 'N'
-GROUP BY l.l_linestatus
-""",
-    doc="TPC-H Q12 shape: fact-to-fact join feeding per-group "
-    "conditional counts (synthetic schema has no l_shipmode; "
-    "l_linestatus plays its role and l_returnflag the receipt-window "
-    "predicate). The lineitem filter lands before the shuffle so only "
-    "matching lines move; the CASE counts fold into one partial agg.",
-    tags=("tpch", "join"),
-)
-def q12_priority_by_linestatus(spark, sf_dir):
-    orders = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_returnflag") == "N")
-    )
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        orders.join(li, orders.o_orderkey == li.l_orderkey)
-        .groupBy("l_linestatus")
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
-
-
-@register(
     "q17_small_quantity_revenue",
     oracle=f"""
 WITH pa AS (
@@ -341,43 +302,6 @@ def q22_dormant_customers(spark, sf_dir):
     return dormant.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("numcust"),
         dsum("c_acctbal").alias("totacctbal"),
-    )
-
-
-@register(
-    "q13_customer_distribution",
-    oracle="""
-SELECT c_count, count(*)::BIGINT AS custdist
-FROM (
-  SELECT c.c_custkey, count(o.o_orderkey)::BIGINT AS c_count
-  FROM customer c LEFT OUTER JOIN orders o
-    ON c.c_custkey = o.o_custkey AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey
-)
-GROUP BY c_count
-""",
-    doc="TPC-H Q13 shape: outer-join count distribution — customers "
-    "LEFT OUTER JOIN orders with a join-side-only predicate (the "
-    "filter must NOT drop customerless rows, so it lives in the join "
-    "condition, not a WHERE), per-customer order counts, then the "
-    "histogram of counts. Two hash aggregates, each with map-side "
-    "partial aggregation; the second groups on a tiny int domain.",
-    tags=("tpch", "join",),
-)
-def q13_customer_distribution(spark, sf_dir):
-    c = load(spark, sf_dir, "customer").alias("c")
-    o = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") != "1-URGENT")
-        .alias("o")
-    )
-    per_cust = (
-        c.join(o, F.col("c.c_custkey") == F.col("o.o_custkey"), "left_outer")
-        .groupBy("c.c_custkey")
-        .agg(F.count("o.o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(
-        F.count(F.lit(1)).alias("custdist")
     )
 
 
@@ -799,46 +723,6 @@ def q11_important_stock(spark, sf_dir):
         per_part.crossJoin(F.broadcast(total))
         .filter(F.col("value") > F.col("threshold"))
         .select("ps_partkey", "value")
-    )
-
-
-@register(
-    "q16_supplier_part_counts",
-    oracle=f"""
-WITH {_PS_CTE}
-SELECT p.p_brand, p.p_type, p.p_size,
-       count(DISTINCT ps.ps_suppkey)::BIGINT AS supplier_cnt
-FROM ps
-JOIN part p ON p.p_partkey = ps.ps_partkey
-WHERE p.p_brand <> 'Brand#13'
-  AND p.p_type <> 'PROMO'
-  AND p.p_size IN (1, 4, 9, 16, 25, 36, 49, 50)
-  AND ps.ps_suppkey NOT IN (
-    SELECT s_suppkey FROM supplier WHERE s_acctbal < 500
-  )
-GROUP BY p.p_brand, p.p_type, p.p_size
-""",
-    doc="TPC-H Q16 shape (supplier relationship counts): COUNT "
-    "DISTINCT suppliers per (brand, type, size) bucket, excluding a "
-    "supplier denylist via broadcast anti join (the NOT IN: the "
-    "denylist stands in for the comment-pattern complaint filter — "
-    "the synthetic schema has no s_comment). part is broadcast; the "
-    "one shuffle is the distinct-count aggregation.",
-    tags=("tpch", "agg"),
-)
-def q16_supplier_part_counts(spark, sf_dir):
-    ps = _partsupp(spark, sf_dir)
-    part = load(spark, sf_dir, "part").filter(
-        (F.col("p_brand") != "Brand#13")
-        & (F.col("p_type") != "PROMO")
-        & F.col("p_size").isin(1, 4, 9, 16, 25, 36, 49, 50)
-    )
-    deny = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 500)
-    return (
-        ps.join(F.broadcast(deny), ps.ps_suppkey == deny.s_suppkey, "left_anti")
-        .join(F.broadcast(part), ps.ps_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.countDistinct("ps_suppkey").alias("supplier_cnt"))
     )
 
 

@@ -60,11 +60,14 @@ def test_bench_emits_single_json_line():
 
 def test_every_registered_query_documented():
     """COVERAGE.md is the judge's §2 map — a registered query that
-    never lands a row there is invisible coverage. Keep them lockstep."""
+    never lands a row there is invisible coverage — and OVERLAP.md
+    has one row per registered query. Keep both lockstep."""
     import pathlib
 
     from ast_data_pipeline_spark.registry import load_all
 
-    cov = (pathlib.Path(__file__).parent.parent / "COVERAGE.md").read_text()
-    missing = [n for n in load_all() if n not in cov]
-    assert not missing, f"queries missing from COVERAGE.md: {missing}"
+    repo = pathlib.Path(__file__).parent.parent
+    for doc in ("COVERAGE.md", "OVERLAP.md"):
+        text = (repo / doc).read_text()
+        missing = [n for n in load_all() if n not in text]
+        assert not missing, f"queries missing from {doc}: {missing}"

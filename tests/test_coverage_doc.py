@@ -5,9 +5,9 @@ nothing guarded them. Two directions, both enforced:
 
 1. every registered query name appears in COVERAGE.md (no
    undocumented operator);
-2. every query-shaped token in COVERAGE.md, SHUFFLE.md and PROFILE.md
-   resolves in the registry (no ghost rows naming removed/renamed
-   queries).
+2. every query-shaped token in COVERAGE.md, SHUFFLE.md, PROFILE.md
+   and OVERLAP.md resolves in the registry (no ghost rows naming
+   removed/renamed queries).
 
 Query-shaped = matches the registry's family-prefix grammar
 (q18_*, s_stream_*, x_*, a_*, ... — see ``_QUERY_TOKEN``). Plain
@@ -23,9 +23,12 @@ from ast_data_pipeline_spark.registry import load_all
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 DOC = REPO / "COVERAGE.md"
-# Generated per-query tables (tools/shuffle_audit.py, PROFILE.md) that
-# must drop a query's rows when it is retired.
-GHOST_CHECKED_DOCS = (DOC, REPO / "SHUFFLE.md", REPO / "PROFILE.md")
+# Generated per-query tables (tools/shuffle_audit.py, PROFILE.md,
+# tools/query_overlap.py) that must drop a query's rows when it is
+# retired.
+GHOST_CHECKED_DOCS = (
+    DOC, REPO / "SHUFFLE.md", REPO / "PROFILE.md", REPO / "OVERLAP.md",
+)
 
 _QUERY_TOKEN = re.compile(
     r"^(?:q\d+|s\d+|k\d+|p\d+|f\d+|o\d+|u\d+|a\d*|j\d*|w|x|e|t|d|s_stream|flagship)"

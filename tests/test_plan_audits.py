@@ -116,16 +116,31 @@ def test_every_dsum_site_is_scaled_or_classified():
 
 
 def test_sf1_gate_names_exist_in_registry():
-    """tools/sf1_gate.py's ENVELOPE_RISK set is an explicit review
-    ledger (which queries get the one-decade-up oracle gate); a
-    renamed or deregistered query must be noticed here, not silently
-    skipped by the gate."""
+    """Every tool ledger that names queries is an explicit review
+    list: tools/sf1_gate.py's ENVELOPE_RISK (which queries get the
+    one-decade-up oracle gate), window_audit.CLASSIFIED,
+    dump_plans.HEADLINERS, scale_proof.QUERIES and shuffle_audit's
+    ADJUDICATED and PROFILE_TAIL. A renamed or retired query must be
+    noticed here, not silently skipped by the tool."""
+    import dump_plans
+    import scale_proof
     import sf1_gate
+    import shuffle_audit
+    import window_audit
 
     from ast_data_pipeline_spark.registry import load_all
 
     specs = load_all()
-    missing = [n for n in sf1_gate.ENVELOPE_RISK if n not in specs]
-    assert not missing, f"ENVELOPE_RISK names not in registry: {missing}"
+    ledgers = {
+        "sf1_gate.ENVELOPE_RISK": sf1_gate.ENVELOPE_RISK,
+        "window_audit.CLASSIFIED": window_audit.CLASSIFIED,
+        "dump_plans.HEADLINERS": dump_plans.HEADLINERS,
+        "scale_proof.QUERIES": scale_proof.QUERIES,
+        "shuffle_audit.ADJUDICATED": shuffle_audit.ADJUDICATED,
+        "shuffle_audit.PROFILE_TAIL": shuffle_audit.PROFILE_TAIL,
+    }
+    for ledger, names in ledgers.items():
+        missing = [n for n in names if n not in specs]
+        assert not missing, f"{ledger} names not in registry: {missing}"
     unknown = [n for n in sf1_gate.EXPECTED_BREACH if n not in sf1_gate.ENVELOPE_RISK]
     assert not unknown, f"EXPECTED_BREACH entries outside the gate: {unknown}"

@@ -71,19 +71,16 @@ LARGE: frozenset[str] = frozenset(
         "q6_forecast_revenue", "q7_volume_shipping", "q8_market_share",
         "q9_product_profit", "q10_returned_items", "q11_important_stock",
         "q14_promo_revenue", "q15_top_supplier",
-        "q17_small_quantity_revenue", "q18_large_volume_customers",
-        "q19_disjunctive_join", "q20_excess_stock_suppliers",
+        "q17_small_quantity_revenue", "q19_disjunctive_join", "q20_excess_stock_suppliers",
         "q22_dormant_customers",
         # order/lineitem/customer aggregates
-        "a_rollup_priority_status", "a_cube_priority_status",
-        "a_grouping_sets", "a_unpivot_measures", "a_histogram_equiwidth",
+        "a_grouping_sets", "a_unpivot_measures",
         "a_table_checksum", "a_rollup_grouping_id", "j3_broadcast_semi",
         "j_salted_skew_join", "w_percent_of_total", "w_running_sum",
         "s11_orc_roundtrip", "s23_partitioned_datasource",
         # event-value statistics (value >= ~1, n >= 1e2)
         "e_tumbling_window_agg", "e_topk_users_by_value",
-        "e_ab_test_analysis", "e_pct_change_daily",
-        "e_user_activity_zscore", "e_rfm_scores",
+        "e_ab_test_analysis", "e_rfm_scores",
         "e_attribution_last_touch", "e_theilsen_trend",
         "e_cusum_changepoint", "e_metric_decomposition",
         "t_range_join", "t_ewma", "t_interp_linear", "t_rolling_corr",
@@ -111,7 +108,7 @@ UNIT: frozenset[str] = frozenset(
         "char_entropy_frame", "x_char_entropy", "x_js_divergence",
         "x_mixture_temperature", "x_dsir_importance",
         "x_rbo_rank_agreement", "x_ndcg_eval", "e_survival_km",
-        "x_embedding_drift", "x_centroid_cosine_matrix",
+        "x_embedding_drift",
     }
 )
 

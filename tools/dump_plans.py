@@ -14,11 +14,6 @@ import sys
 
 sys.path.insert(0, ".")
 
-# Plans document the raw-lineage shapes (the 100 TB story); the session
-# view cache would replace the domain-view subtrees with
-# InMemoryRelation scans and hide pushdown/exchange structure.
-os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
-
 from ast_data_pipeline_spark.registry import load_all
 from ast_data_pipeline_spark.session import get_spark
 
@@ -185,6 +180,10 @@ def trimmed_plan(df) -> str:
 
 
 def main() -> None:
+    # Plans document the raw-lineage shapes (the 100 TB story); the session
+    # view cache would replace the domain-view subtrees with
+    # InMemoryRelation scans and hide pushdown/exchange structure.
+    os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("plans")
     specs = load_all()

@@ -6,7 +6,7 @@ schema, order-insensitive canonical value hash) — and records the
 result in the same JSON shape as CORRECTNESS_r*.json.
 
 Why a per-round artifact: the driver grades only a ~50-query budgeted
-prefix per round, so with 356 queries the full driver re-proof cycle
+prefix per round, so with 339 queries the full driver re-proof cycle
 is ~7 rounds. The builder already re-proves the whole surface every
 round; recording that run makes cumulative freshness auditable
 (``tools/grade_age.py`` consumes SWEEP_r*.json as a self-reported,

@@ -21,13 +21,11 @@ import os
 import pathlib
 import sys
 import time
-import urllib.request
 
 REPO = pathlib.Path(__file__).resolve().parents[1]
-if str(REPO) not in sys.path:
-    sys.path.insert(0, str(REPO))
-
-os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
+for p in (REPO, REPO / "perfbench"):
+    if str(p) not in sys.path:
+        sys.path.insert(0, str(p))
 
 QUERIES = (
     "flagship_tank_inventory",
@@ -37,46 +35,19 @@ QUERIES = (
 )
 
 
-def _fresh_session(cpus: int):
+def _fresh_session():
     """One SparkSession per query: sf1-sized localCheckpoint blocks
     from a previous query otherwise stay pinned in the shared JVM and
     poison the next query's measurement (first run of this tool read
     d_distribution_by_county as 21x when its true sf1 cost is ~1.5x —
     the blocks, not the plan)."""
-    from pyspark.sql import SparkSession
+    from spans import StatusProbe
 
-    from ast_data_pipeline_spark.session import driver_memory
+    from ast_data_pipeline_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("scale-proof")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", driver_memory())
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedStages", "200000")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .getOrCreate()
-    )
+    spark = get_spark("scale-proof")
     spark.sparkContext.setLogLevel("ERROR")
-    ui = spark.sparkContext.uiWebUrl
-
-    def rest(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/{path}") as r:
-            return json.load(r)
-
-    app_id = rest("applications")[0]["id"]
-
-    def shuffle_write() -> int:
-        return sum(
-            s.get("shuffleWriteBytes", 0)
-            for s in rest(f"applications/{app_id}/stages")
-            if s.get("status") in ("COMPLETE", "SKIPPED")
-        )
-
-    return spark, shuffle_write
+    return spark, StatusProbe(spark)
 
 
 def main() -> None:
@@ -106,30 +77,30 @@ def main() -> None:
         help="registered query names to measure (default: flagship set)",
     )
     a = ap.parse_args()
+    os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
     base_label = a.base_label or os.path.basename(a.base.rstrip("/"))
 
     from ast_data_pipeline_spark.registry import load_all
     from ast_data_pipeline_spark.sources.domain_views import clear_view_cache
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     specs = load_all()
     result: dict = {"kind": "sf1_scale_proof", "ts": time.time(), "queries": {}}
 
     for name in a.queries:
         per_sf = {}
-        spark, shuffle_write = _fresh_session(cpus)
+        spark, probe = _fresh_session()
         # warm the JVM so sf0.1's first run doesn't carry codegen
         # compile cost that sf1 (running second, warm) skips
         spark.range(1_000_000).selectExpr("sum(id)").collect()
         for label, sf in ((base_label, a.base), (a.label, a.sf1)):
             clear_view_cache()
             times = []
-            sw0 = shuffle_write()
+            mark = probe.mark()
             for _ in range(2):
                 t0 = time.perf_counter()
                 n = specs[name].fn(spark, sf).count()
                 times.append(time.perf_counter() - t0)
-            sw = shuffle_write() - sw0
+            sw = probe.since(mark).shuffle_write_bytes
             per_sf[label] = {
                 "rows_out": n,
                 "sec_min2": round(min(times), 2),

@@ -27,8 +27,6 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 if str(REPO) not in sys.path:
     sys.path.insert(0, str(REPO))
 
-os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
-
 # Full-ledger watch threshold and the rows already adjudicated (reason
 # recorded here so the ledger is self-contained). Bytes are at sf0.01
 # raw lineage unless the name is also a headline/tail query.
@@ -41,7 +39,38 @@ ADJUDICATED = {
 }
 
 
+# PROFILE.md top-20 tail: the expensive iterative / similarity
+# queries get the same byte audit — their wall times are noisy, but a
+# fat shuffle payload is deterministic evidence. Kept as an explicit
+# list so the audit is stable across PROFILE regens;
+# tests/test_plan_audits.py checks every name is registered.
+PROFILE_TAIL = (
+    "x_kmeans_lloyd_exact",
+    "a_exact_quantiles",
+    "s_stream_stream_join",
+    "d_inventory_utm",
+    "x_power_iteration_pc1",
+    "a_histogram_equidepth",
+    "x_pc1_explained_variance",
+    "x_triangle_count",
+    "x_kcore_peel",
+    "x_embedding_neardup",
+    "x_dedup_clusters",
+    "x_prefix_filter_join",
+    "x_ann_recall_multiprobe",
+    "x_classifier_eval",
+    "x_semantic_dedup",
+    "x_substring_dedup_census",
+    "a_kmv_set_ops",
+    "x_bfs_layers",
+    "a_market_basket_lift",
+    "x_js_divergence",
+    "x_bloom_dedup_screen",
+)
+
+
 def main() -> None:
+    os.environ.setdefault("SPARK_GRAFT_CACHE_VIEWS", "0")
     from pyspark.sql import SparkSession
 
     from ast_data_pipeline_spark.registry import load_all
@@ -87,40 +116,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     specs = load_all()
     bench_names = sorted(n for n, s in specs.items() if "bench" in s.tags)
-    # PROFILE.md top-20 tail (VERDICT r6 #4): the expensive iterative /
-    # similarity queries get the same byte audit — their wall times are
-    # noise-prone on this box, but a fat shuffle payload is
-    # deterministic evidence. Kept as an explicit list so the audit is
-    # stable across PROFILE regens.
-    tail_names = [
-        n
-        for n in (
-            "x_kmeans_lloyd_exact",
-            "a_exact_quantiles",
-            "s_stream_stream_join",
-            "d_inventory_utm",
-            "x_power_iteration_pc1",
-            "a_histogram_equidepth",
-            "x_pc1_explained_variance",
-            "x_triangle_count",
-            "x_kcore_peel",
-            "x_embedding_neardup",
-            "x_cosine_topk_multiprobe",
-            "x_dedup_clusters",
-            "x_minhash_est_quality",
-            "x_prefix_filter_join",
-            "x_ann_recall_multiprobe",
-            "x_classifier_eval",
-            "x_semantic_dedup",
-            "x_substring_dedup_census",
-            "a_kmv_set_ops",
-            "x_bfs_layers",
-            "a_market_basket_lift",
-            "x_js_divergence",
-            "x_bloom_dedup_screen",
-        )
-        if n in specs and n not in bench_names
-    ]
+    tail_names = [n for n in PROFILE_TAIL if n not in bench_names]
 
     from ast_data_pipeline_spark.sources.domain_views import materialized_views
     from ast_data_pipeline_spark.sources.materialize import materialize_domain_views
